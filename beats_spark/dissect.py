@@ -21,8 +21,15 @@ Reimplements the reference semantics (libbeat/processors/dissect/):
 Two execution strategies, chosen at compile time:
 
 1. **Native**: the tokenizer compiles to ONE anchored Java regex with a
-   capture group per field, evaluated with `rlike` + `regexp_extract`
-   — fully JVM-side / whole-stage-codegen. Eligible when there are no
+   capture group per field, evaluated once per row for all fields —
+   fully JVM-side / whole-stage-codegen. `regex.capture_array` rewrites
+   the row with one `regexp_replace` into the separated captures and
+   one `split` turns them into an array; each field is one `get` from
+   it and the match predicate is its size. The Dissect processor
+   materializes the array as a column first, so a Filter Catalyst
+   pushes below the parse (drop_event on a key) copies one evaluation.
+   Rows containing the separator (U+0000) take the exact rlike +
+   regexp_extract path behind a guard. Eligible when there are no
    fixed-length, pointer or indirect fields and greedy padding only
    precedes single-char delimiters. The first-occurrence scan of the Go
    algorithm is equivalent to lazy `(.*?)` captures here (proof sketch:
@@ -41,6 +48,8 @@ from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from beats_spark.regex import capture, capture_array, capture_matched
 
 # --- tokenizer grammar (const.go:25-52) ------------------------------------
 
@@ -422,15 +431,24 @@ class Tokenizer:
         # trailing content after the final delimiter is ignored (no $)
         return "".join(parts)
 
-    def native_exprs(
-        self, src: Column, convert: bool, trimmer: Trimmer | None = None
+    def capture_array(self, src: Column) -> Column:
+        """Every field's raw capture of the native regex in ONE pass
+        (`regex.capture_array`); NULL for the empty string, which the Go
+        algorithm never matches. Materialize it before reading it from
+        more than one expression (see processors.parse.Dissect)."""
+        arr = capture_array(src, self.regex(), len(self.fields), empty_as_null=False)
+        return F.when(F.length(src) > 0, arr)
+
+    def native_values(
+        self, arr: Column, convert: bool, trimmer: Trimmer | None = None
     ) -> tuple[Column, dict[str, Column]]:
-        """(matched_predicate, {output_key: value Column}) — all JVM-side."""
-        pattern = self.regex()
-        matched = (F.length(src) > 0) & src.rlike(pattern)
+        """(matched_predicate, {output_key: value Column}) read from a
+        `capture_array` — all JVM-side, NULL where the row did not match,
+        one reference to the array per field (two or more only for
+        append keys)."""
 
         def group(i: int) -> Column:
-            g = F.regexp_extract(src, pattern, i + 1)
+            g = capture(arr, i)
             if trimmer is not None and not convert:
                 cls = "[" + re.sub(r"([\\\]\[^\-])", r"\\\1", trimmer.chars) + "]+"
                 if trimmer.left:
@@ -452,7 +470,13 @@ class Tokenizer:
             if convert:
                 expr = cast_dissect_type(expr, self.key_type(key))
             values[key] = expr
-        return matched, values
+        return capture_matched(arr, len(self.fields)), values
+
+    def native_exprs(
+        self, src: Column, convert: bool, trimmer: Trimmer | None = None
+    ) -> tuple[Column, dict[str, Column]]:
+        """native_values over an unmaterialized capture array of src."""
+        return self.native_values(self.capture_array(src), convert, trimmer)
 
     @property
     def wants_convert(self) -> bool:

@@ -1,12 +1,19 @@
 """Grok pattern compiler: %{SYNTAX:semantic:type} → one anchored JVM
-regex + a regexp_extract battery.
+regex, evaluated ONCE per row for all of its captures.
 
 The BASELINE north-star names "vectorized grok/regex parse" as the
 parse analog alongside dissect; the reference ships dissect (Logstash/
 ES ingest carry grok), so this is the grok half: a pattern library +
 compiler in the spirit of logstash-patterns-core, emitting expressions
-that stay in whole-stage codegen — one rlike for the match predicate,
-one regexp_extract per captured field, types via try_cast.
+that stay in whole-stage codegen. One `regexp_replace` + `split`
+(`regex.capture_array`) builds an array of every capture of the first
+match; each field is one `get` from it, the match predicate is its
+size, types via try_cast. The Grok processor materializes that array
+as a column before any field reads it, so a Filter Catalyst pushes
+below the parse copies one evaluation and the projection none. Rows
+that contain the array's separator (U+0000), unanchored patterns and
+MULTILINE/COMMENTS-flagged ones take the exact per-capture path (rlike
++ one regexp_extract per field) instead.
 
 Pattern syntax:
     %{SYNTAX}                 match, no capture
@@ -27,8 +34,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.regex import jvm_safe
-
+from beats_spark.regex import capture, capture_array, capture_matched, jvm_safe
 from beats_spark.fields import add_flag, field_col, put_fields
 from beats_spark.processors.base import Processor, register
 from beats_spark.processors.shape import _set_error
@@ -257,28 +263,50 @@ def compile_grok(
     return regex, captures
 
 
+def grok_captures(
+    src: Column,
+    pattern: str,
+    extra_patterns: dict[str, str] | None = None,
+    anchored: bool = True,
+) -> tuple[Column, list[tuple[str, str | None]]]:
+    """(capture array, captures) of one grok pattern: the array holds
+    every captured field of the first match, built in one regex pass
+    (`regex.capture_array`); the captures are compile_grok's ordered
+    [(field, cast_type|None)]. Unanchored patterns (ES-ingest search
+    semantics) take the exact per-capture path."""
+    regex, captures = compile_grok(pattern, extra_patterns)
+    if anchored and not regex.startswith("^"):
+        regex = "^" + regex
+    arr = capture_array(
+        src, regex, len(captures), empty_as_null=True, single_pass=anchored
+    )
+    return arr, captures
+
+
+def grok_values(
+    arr: Column, captures: list[tuple[str, str | None]]
+) -> tuple[Column, dict[str, Column]]:
+    """(matched_predicate, {field: value Column}) read from a capture
+    array — one reference to it per field, typed via try_cast."""
+    values: dict[str, Column] = {}
+    for i, (field, typ) in enumerate(captures):
+        v = capture(arr, i)
+        values[field] = v if typ is None else v.try_cast(typ)
+    return capture_matched(arr, len(captures)), values
+
+
 def grok_columns(
     src: Column,
     pattern: str,
     extra_patterns: dict[str, str] | None = None,
     anchored: bool = True,
 ) -> tuple[Column, dict[str, Column]]:
-    """(matched_predicate, {field: value Column}) — all JVM-side:
-    rlike + one regexp_extract per capture, casts via try_cast."""
-    regex, captures = compile_grok(pattern, extra_patterns)
-    if anchored and not regex.startswith("^"):
-        regex = "^" + regex
-    matched = src.isNotNull() & src.rlike(regex)
-    # regexp_extract numbers OUR groups 1..N, but expanded sub-patterns
-    # contain only non-capturing groups, so indices line up with the
-    # capture order
-    values: dict[str, Column] = {}
-    for i, (field, typ) in enumerate(captures):
-        g = F.when(matched, F.nullif(F.regexp_extract(src, regex, i + 1), F.lit("")))
-        if typ is not None:
-            g = g.try_cast(typ)
-        values[field] = g
-    return matched, values
+    """(matched_predicate, {field: value Column}) — all JVM-side: one
+    regexp_replace + split builds every capture at once; empty
+    captures are NULL, casts via try_cast. The expressions share one
+    unmaterialized capture array; a processor that filters on them
+    should materialize it first (see Grok.apply)."""
+    return grok_values(*grok_captures(src, pattern, extra_patterns, anchored))
 
 
 @register
@@ -314,36 +342,40 @@ class Grok(Processor):
         tp = self.cfg.get("target_prefix", "")
         prefix = (tp + ".") if tp else ""
         anchored = self.cfg.get("anchored", True)
-        compiled = [
-            grok_columns(src.cast("string"), p, extra, anchored=anchored)
-            for p in pats
-        ]
-        matched_any: Column = F.lit(False)
-        fields: dict[str, Column] = {}
-        for matched, values in compiled:
-            # first-match-wins: a later pattern only fills fields for
-            # rows no earlier pattern matched
-            take = matched & ~matched_any
-            for k, v in values.items():
-                prev = fields.get(k)
-                # no explicit otherwise on first occurrence: an untyped
-                # NULL literal would coerce typed captures to string
-                fields[k] = (
-                    F.when(take, v) if prev is None else F.when(take, v).otherwise(prev)
-                )
-            matched_any = matched_any | matched
-        # Materialize every capture (and the match predicate) in ONE
-        # projection from the ORIGINAL source before any put_field: a
+        # ONE capture array per pattern, materialized from the ORIGINAL
+        # source before any field reads it: each field then holds a
+        # single reference, so the Filter Catalyst pushes down (e.g.
+        # drop_event on a capture) copies the pattern's evaluation once
+        # and the projection reads the column it already built; and a
         # capture that overwrites the source field itself (ES grok's
         # in-place `message` overwrite, e.g. kafka/icinga pipelines)
-        # would otherwise poison later captures in the same stage —
-        # withColumn re-resolves `message` against the updated plan.
-        tmp = {f"__grok_{i}__": v for i, v in enumerate(fields.values())}
-        tmp["__grok_matched__"] = F.coalesce(matched_any, F.lit(False))
-        df = df.withColumns(tmp)
+        # cannot poison the other captures
+        parsed = [
+            grok_captures(src.cast("string"), p, extra, anchored=anchored)
+            for p in pats
+        ]
+        arrs = {f"__grok_arr_{k}__": arr for k, (arr, _) in enumerate(parsed)}
+        df = df.withColumns(arrs)
+        matched_any: Column | None = None
+        fields: dict[str, Column] = {}
+        for name, (_, captures) in zip(arrs, parsed):
+            matched, values = grok_values(F.col(name), captures)
+            # first-match-wins: a later pattern only fills fields for
+            # rows no earlier pattern matched (the first pattern's
+            # captures are already NULL where it did not match)
+            take = None if matched_any is None else matched & ~matched_any
+            for k, v in values.items():
+                prev = fields.get(k)
+                if take is not None:
+                    # no explicit otherwise on first occurrence: an
+                    # untyped NULL literal would coerce typed captures
+                    v = F.when(take, v)
+                    if prev is not None:
+                        v = v.otherwise(prev)
+                fields[k] = v
+            matched_any = matched if matched_any is None else matched_any | matched
         writes: dict[str, Column] = {}
-        for i, k in enumerate(fields):
-            v = F.col(f"__grok_{i}__")
+        for k, v in fields.items():
             cur = field_col(df, prefix + k)
             if cur is not None:
                 # ES grok only ADDS fields: a failed match (or a
@@ -357,8 +389,8 @@ class Grok(Processor):
         # one batched projection: per-put_field withField chains make
         # the optimizer re-inline quadratically (see fields.put_fields)
         df = put_fields(df, writes)
-        failed = ~F.col("__grok_matched__")
+        failed = ~matched_any
         df = add_flag(df, "grok_parse_failure", failed)
         if not self.cfg.get("ignore_failure", False):
             df = _set_error(df, failed, "grok: no pattern matched")
-        return df.drop(*tmp)
+        return df.drop(*arrs)

@@ -528,18 +528,22 @@ def pipeline_aggs(
     w_mov = w_ord.rowsBetween(-(window - 1), Window.currentRow)
     out = buckets
     for m in metric_cols:
-        scaled = F.lit(int(scale)) * F.sum(m).over(w_mov)
-        mcnt = F.count(F.lit(1)).over(w_mov)
-        # exact integer floor division of two BIGINTs (both
-        # non-negative): subtract the pmod first so the / is an exact
-        # integer — never a rounded double (CLAUDE.md oracle rule)
-        mavg = ((scaled - F.pmod(scaled, mcnt)) / mcnt).cast("long")
+        # exact integer floor division of two BIGINTs: (s - pmod(s, n))
+        # is divisible by n, so the truncating `div` IS the floor — the
+        # IEEE `/` rounds once scale·sum passes 2^53 (exact-integer oracle
+        # rule; same as geo's centroid)
         out = (
             out.withColumn(f"cum_{m}", F.sum(m).over(w_cum).cast("long"))
             .withColumn(
                 f"deriv_{m}", (F.col(m) - F.lag(m, 1).over(w_ord)).cast("long")
             )
-            .withColumn(f"mavg_{m}_scaled", mavg)
+            .withColumn("__mavg_s", F.lit(int(scale)) * F.sum(m).over(w_mov))
+            .withColumn("__mavg_n", F.count(F.lit(1)).over(w_mov))
+            .withColumn(
+                f"mavg_{m}_scaled",
+                F.expr("(__mavg_s - pmod(__mavg_s, __mavg_n)) div __mavg_n"),
+            )
+            .drop("__mavg_s", "__mavg_n")
         )
     return out
 

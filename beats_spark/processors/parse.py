@@ -42,8 +42,9 @@ class Dissect(Processor):
     trim_values, trim_chars.
 
     Strategy (dissect.py): tokenizer compiles to ONE anchored Java
-    regex evaluated JVM-side when eligible; otherwise an Arrow-batched
-    pandas UDF returning map<string,string>. Failure appends
+    regex evaluated JVM-side, once per row for all keys, when eligible;
+    otherwise an Arrow-batched pandas UDF returning
+    map<string,string>. Failure appends
     `dissect_parsing_error` to the flags column (processor.go:106-117)
     and, unless ignore_failure, sets the error column.
     """
@@ -66,22 +67,19 @@ class Dissect(Processor):
             return _set_error(df, F.lit(True), f"dissect: missing field {self.field}")
         convert = self.tok.wants_convert
         if self.tok.native_compilable:
-            matched, values = self.tok.native_exprs(src, convert, self.tok.trimmer)
-            # materialize the predicate, then write every key in ONE
-            # batched projection: a per-key put_field chain re-inlines
-            # quadratically in the optimizer, and an in-place overwrite
-            # of the source field (target_prefix "") would poison later
-            # keys + the failure flag (same fix as Grok / put_fields)
-            df = df.withColumn(
-                "__dissect_matched__", F.coalesce(matched, F.lit(False))
+            # materialize the capture array, then write every key in ONE
+            # batched projection of single array reads: the Filter that
+            # Catalyst pushes down (drop_event on a key) then copies the
+            # pattern's one evaluation, a per-key put_field chain cannot
+            # re-inline quadratically, and an in-place overwrite of the
+            # source field (target_prefix "") cannot poison later keys
+            # or the failure flag (same fix as Grok / put_fields)
+            df = df.withColumn("__dissect_arr__", self.tok.capture_array(src))
+            matched, values = self.tok.native_values(
+                F.col("__dissect_arr__"), convert, self.tok.trimmer
             )
-            matched = F.col("__dissect_matched__")
             df = put_fields(
-                df,
-                {
-                    self.prefix + key: F.when(matched, expr)
-                    for key, expr in values.items()
-                },
+                df, {self.prefix + key: expr for key, expr in values.items()}
             )
         else:
             udf = make_dissect_udf(self.tok)
@@ -107,7 +105,7 @@ class Dissect(Processor):
         df = add_flag(df, "dissect_parsing_error", failed)
         if not self.cfg.get("ignore_failure", False):
             df = _set_error(df, failed, "dissect: unable to tokenize field")
-        return df.drop("__dissect_matched__")
+        return df.drop("__dissect_matched__", "__dissect_arr__")
 
 
 @register

@@ -21,6 +21,8 @@ F.transform/F.aggregate over shingle arrays (JVM-side).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -739,7 +741,11 @@ def line_frequency_dedup(
     """
     lines = df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("__line_no", "__line"),
+        # split takes a Java regex: escape sep so '.', '|', '\\' split
+        # on the literal separator array_join reassembles with
+        F.posexplode(F.split(F.col(text_col), re.escape(sep))).alias(
+            "__line_no", "__line"
+        ),
     )
     h1, h2 = content_key(F.col("__line"))
     keyed = lines.select(

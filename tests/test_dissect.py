@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from beats_spark.dissect import Tokenizer, TokenizerError, make_dissect_udf, make_trimmer
+from tests.harness import GOLDEN_ABSENT
 
 CORPUS = "/root/reference/libbeat/processors/dissect/testdata/dissect_tests.json"
 
@@ -24,7 +25,16 @@ def load_cases():
 CASES = load_cases()
 
 
-@pytest.mark.parametrize("case", CASES, ids=[c["name"][:60] for c in CASES])
+def golden_params(cases):
+    """One param per corpus case, or one skipped placeholder that
+    states why when the corpus is absent."""
+    if not os.path.exists(CORPUS):
+        reason = f"{GOLDEN_ABSENT}: dissect_tests.json"
+        return [pytest.param(None, id="corpus", marks=pytest.mark.skip(reason=reason))]
+    return [pytest.param(c, id=c["name"][:60]) for c in cases]
+
+
+@pytest.mark.parametrize("case", golden_params(CASES))
 def test_golden_corpus_python_kernel(case):
     tok = Tokenizer(case["tok"])
     out = tok.dissect(case["msg"])
@@ -101,9 +111,7 @@ def test_missing_indirect_reference_rejected():
 NATIVE_CASES = [c for c in CASES if Tokenizer(c["tok"]).native_compilable]
 
 
-@pytest.mark.parametrize(
-    "case", NATIVE_CASES, ids=[c["name"][:60] for c in NATIVE_CASES]
-)
+@pytest.mark.parametrize("case", golden_params(NATIVE_CASES))
 def test_native_regex_matches_kernel(spark, case):
     tok = Tokenizer(case["tok"])
     df = spark.createDataFrame([(case["msg"],)], "msg string")

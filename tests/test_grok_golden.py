@@ -55,8 +55,13 @@ from pyspark.sql import functions as F
 
 from beats_spark.fields import field_col
 from beats_spark.processors import compile_one
+from tests.harness import GOLDEN_ABSENT
 
 MODULES = pathlib.Path("/root/reference/filebeat/module")
+
+pytestmark = pytest.mark.skipif(
+    not MODULES.is_dir(), reason=f"{GOLDEN_ABSENT}: filebeat module test logs"
+)
 
 
 def _grok_cfgs(pipeline_yaml: pathlib.Path) -> list[dict]:

@@ -1,0 +1,445 @@
+"""Match once: grok and native dissect build every capture of a row in
+ONE regex evaluation (`regex.capture_array`: one regexp_replace + split),
+falling back to the exact per-capture path (rlike + one regexp_extract
+per group) only for rows that contain the separator.
+
+Differential properties on generated lines: the single-pass array must
+agree with the per-capture path (both on the JVM, any text) and with
+Python `re` on the compiled regex (ASCII text, where Java's and
+Python's classes coincide); native dissect must agree with the Python
+port of the Go algorithm (`Tokenizer.dissect`). Plan-shape tests pin
+that a processor chain evaluates each pattern at most once per
+operator on the common path."""
+
+from __future__ import annotations
+
+import re
+import string
+
+import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
+
+from beats_spark.datagen import token_events_sql
+from beats_spark.dissect import Tokenizer, make_trimmer
+from beats_spark.flagship import flagship_config
+from beats_spark.grok import compile_grok, grok_columns, grok_values
+from beats_spark.pipeline import Pipeline
+from beats_spark.processors import compile_one
+from beats_spark.regex import SEP, capture_array, single_pass_ok
+from tests.test_dissect_properties import tokenizers
+
+EXAMPLES = settings(max_examples=25, deadline=None)
+
+# --- line generators ----------------------------------------------------------
+
+# text the patterns' literals and classes care about, plus the separator
+_JUNK = st.text(alphabet=' ab1Z_=";:.-[]/+\t' + SEP, max_size=12)
+# the same with text Python `re` may not model like Java: non-ASCII
+# (Java's \b is Unicode-aware while \w is ASCII) and \r (Java's `.`
+# stops at it)
+_JUNK_WIDE = st.text(alphabet=' ab1=";:.-\ré中' + SEP, max_size=12)
+_WORD = st.text(alphabet=string.ascii_letters + string.digits + "_", min_size=1, max_size=6)
+_INT = st.integers(-(10**20), 10**20).map(str) | st.integers(0, 999).map(lambda n: f"+{n}")
+_DATA = st.text(alphabet=' ab=";.-' + SEP, max_size=8)
+_NOTSPACE = st.text(alphabet='ab1./:"=-', min_size=1, max_size=8)
+_IPV4 = st.tuples(*[st.integers(0, 300)] * 4).map(lambda t: ".".join(map(str, t)))
+_IPV6 = st.lists(st.sampled_from(["", "0", "fe80", "AB1"]), min_size=3, max_size=8).map(
+    ":".join
+)
+_TS = st.builds(
+    "{:04d}-{:02d}-{:02d}{}{:02d}:{:02d}:{:02d}{}".format,
+    st.integers(1990, 2030), st.integers(0, 13), st.integers(0, 32),
+    st.sampled_from(["T", " "]), st.integers(0, 24), st.integers(0, 60),
+    st.integers(0, 60), st.sampled_from(["Z", "+01:00", "-0800", "", ".123Z"]),
+)
+_SYNTAX = {
+    "WORD": _WORD,
+    "INT": _INT,
+    "DATA": _DATA,
+    "GREEDYDATA": _DATA,
+    "NOTSPACE": _NOTSPACE,
+    "IP": _IPV4 | _IPV6,
+    "TIMESTAMP_ISO8601": _TS,
+}
+_REF = re.compile(r"%\{(\w+)(?::[\w.]+)?(?::\w+)?\}")
+
+
+def _pieces(pattern: str) -> list:
+    """Literal text and one value strategy per %{SYNTAX…} reference."""
+    out: list = []
+    pos = 0
+    for m in _REF.finditer(pattern):
+        out.append(pattern[pos : m.start()].replace("\\", ""))
+        out.append(_SYNTAX[m.group(1)] | _JUNK)
+        pos = m.end()
+    out.append(pattern[pos:].replace("\\", ""))
+    return out
+
+
+@st.composite
+def _mutated(draw, pieces: list, junk=_JUNK):
+    """A line that mostly fits the pieces, then maybe trailing text, a
+    cut, an embedded separator, or unrelated text."""
+    line = "".join(p if isinstance(p, str) else draw(p) for p in pieces)
+    how = draw(st.sampled_from(["fit", "trail", "cut", "sep", "other"]))
+    if how == "trail":
+        line += draw(junk)
+    elif how == "cut":
+        line = line[: draw(st.integers(0, len(line)))]
+    elif how == "sep":
+        i = draw(st.integers(0, len(line)))
+        line = line[:i] + SEP + line[i:]
+    elif how == "other":
+        line = draw(junk)
+    return line
+
+
+def _batch(pieces: list, junk=_JUNK):
+    return st.lists(_mutated(pieces, junk) | st.none(), min_size=1, max_size=30)
+
+
+_APACHE_PIECES = [
+    _IPV4 | st.just("host.example"), " ", st.sampled_from(["-", "bob"]), " ",
+    st.sampled_from(["-", "frank"]),
+    ' [10/Oct/2000:13:55:36 -0700] "',
+    # request with and without the optional HTTP version, or free text
+    # that only the %{DATA:rawrequest} alternative takes
+    st.sampled_from(
+        ["GET /a.gif HTTP/1.0", "GET /a.gif", "POST /x?y=1 HTTP/2", "junk", ""]
+    ),
+    '" ', _INT, " ", st.sampled_from(["2326", "-", "x"]),
+]
+
+KV = (
+    "level=%{WORD:level} ts=%{TIMESTAMP_ISO8601:ts} caller=%{NOTSPACE:caller} "
+    'msg="%{DATA:msg}" ip=%{IP:ip} seq=%{INT:seq:long}'
+)
+# 12 captures: the replacement carries $10..$12
+WIDE = ",".join(
+    f"%{{INT:n{i}:int}}" if i % 4 == 0 else f"%{{WORD:w{i}}}" for i in range(12)
+)
+# empty and adjacent optional captures
+EMPTY = "a=%{DATA:a};b=%{DATA:b};%{GREEDYDATA:rest}"
+# a top-level alternation: only the first branch is anchored, and the
+# second can match empty again at the end of the row
+ALT = "%{INT:n:int}=%{WORD:w}|%{DATA:d}"
+
+GROK_CASES = {
+    "kv": (KV, _pieces(KV)),
+    "wide": (WIDE, _pieces(WIDE)),
+    "empty": (EMPTY, _pieces(EMPTY)),
+    "alt": (ALT, _pieces(ALT.split("|")[0])),
+    "apache": ("%{COMMONAPACHELOG}", _APACHE_PIECES),
+}
+
+# --- grok ----------------------------------------------------------------------
+
+
+def _anchored(pattern: str) -> tuple[str, list]:
+    regex, caps = compile_grok(pattern)
+    return ("^" + regex if not regex.startswith("^") else regex), caps
+
+
+def _py_cast(v: str | None, typ: str | None):
+    if v is None or typ is None:
+        return v
+    bits = {"int": 32, "long": 64}[typ]
+    n = int(v)
+    return n if -(2 ** (bits - 1)) <= n < 2 ** (bits - 1) else None
+
+
+def _py_grok(rx: re.Pattern, caps: list, line: str | None) -> tuple:
+    """Python `re` model of grok_columns: first match (find), empty or
+    non-participating groups NULL, typed via a range-checked int."""
+    m = rx.search(line) if line is not None else None
+    if m is None:
+        return (False, *[None] * len(caps))
+    return (True, *[_py_cast(m.group(i + 1) or None, t) for i, (_, t) in enumerate(caps)])
+
+
+def _grok_rows(spark, pattern: str, lines: list) -> tuple[list, list]:
+    """(single-pass rows, per-capture rows) as (matched, *fields)."""
+    regex, caps = _anchored(pattern)
+    s = F.col("s")
+    fast = grok_columns(s, pattern)
+    exact = grok_values(
+        capture_array(s, regex, len(caps), empty_as_null=True, single_pass=False), caps
+    )
+    cols = []
+    for tag, (matched, values) in (("f", fast), ("x", exact)):
+        cols.append(matched.alias(f"{tag}_m"))
+        cols += [values[f].alias(f"{tag}_{i}") for i, (f, _) in enumerate(caps)]
+    rows = spark.createDataFrame([(v,) for v in lines], "s string").select(*cols).collect()
+    k = len(caps) + 1
+    return [tuple(r)[:k] for r in rows], [tuple(r)[k:] for r in rows]
+
+
+def test_grok_cases_take_the_single_pass():
+    for pattern, _ in GROK_CASES.values():
+        assert single_pass_ok(_anchored(pattern)[0])
+
+
+@pytest.mark.parametrize("case", sorted(GROK_CASES))
+@EXAMPLES
+@given(data=st.data())
+def test_grok_single_pass_agrees_with_per_capture_and_re(spark, case, data):
+    pattern, pieces = GROK_CASES[case]
+    lines = data.draw(_batch(pieces))
+    fast, exact = _grok_rows(spark, pattern, lines)
+    regex, caps = _anchored(pattern)
+    rx = re.compile(regex, re.ASCII)
+    for line, f, x in zip(lines, fast, exact):
+        assert f == x, (line, f, x)
+        assert f == _py_grok(rx, caps, line), (line, f)
+
+
+@pytest.mark.parametrize("case", ["kv", "apache"])
+@EXAMPLES
+@given(data=st.data())
+def test_grok_single_pass_agrees_with_per_capture_on_any_text(spark, case, data):
+    pattern, pieces = GROK_CASES[case]
+    lines = data.draw(_batch(pieces, _JUNK_WIDE))
+    fast, exact = _grok_rows(spark, pattern, lines)
+    assert fast == exact
+
+
+def test_grok_hand_cases(spark):
+    """Pinned edges: the separator in a matching row, an empty row, the
+    12-capture pattern's $10+ groups, an int overflow, the COMMONAPACHELOG
+    optional-group alternation."""
+    line12 = ",".join(str(i) if i % 4 == 0 else f"w{i}" for i in range(12))
+    lines = [line12, line12 + SEP, "", "99999999999" + line12[1:]]
+    fast, exact = _grok_rows(spark, WIDE, lines)
+    assert fast == exact
+    want = (0, "w1", "w2", "w3", 4, "w5", "w6", "w7", 8, "w9", "w10", "w11")
+    assert fast[0] == (True, *want)
+    assert fast[1] == fast[0]  # \b\w+\b stops before the separator
+    assert fast[2][0] is False
+    assert fast[3][0] is True and fast[3][1] is None  # try_cast overflow
+    apache = ['1.2.3.4 - - [10/Oct/2000:13:55:36 -0700] "junk" 200 -']
+    fast, exact = _grok_rows(spark, "%{COMMONAPACHELOG}", apache)
+    assert fast == exact
+    caps = [c for c, _ in compile_grok("%{COMMONAPACHELOG}")[1]]
+    got = dict(zip(caps, fast[0][1:]))
+    assert got["rawrequest"] == "junk" and got["verb"] is None and got["bytes"] is None
+
+
+_MULTI = [
+    "%{LOGLEVEL:level} %{GREEDYDATA:message}",
+    "access %{IPV4:client} %{WORD:method}",
+    "%{WORD:level}=%{INT:code:int}",
+]
+_MULTI_LINE = st.one_of(
+    st.builds("{} {}".format, st.sampled_from(["ERROR", "warn", "Info", "x"]), _DATA),
+    st.builds("access {} {}".format, _IPV4, _WORD | _JUNK),
+    st.builds("{}={}".format, _WORD, _INT),
+)
+
+
+def _py_multi(message: str | None) -> tuple[dict, bool]:
+    """Python model of the Grok processor over _MULTI on field
+    `message`: (fields, failed). The first matching pattern wins; a
+    capture that is NULL leaves the pre-existing `message` as it was."""
+    out = {"level": None, "client": None, "method": None, "code": None, "message": message}
+    for p in _MULTI:
+        regex, caps = _anchored(p)
+        m = re.compile(regex, re.ASCII).search(message) if message is not None else None
+        if m:
+            for i, (f, t) in enumerate(caps):
+                v = _py_cast(m.group(i + 1) or None, t)
+                if f != "message" or v is not None:
+                    out[f] = v
+            return out, False
+    return out, True
+
+
+@EXAMPLES
+@given(lines=st.lists(_mutated([_MULTI_LINE]) | st.none(), min_size=1, max_size=30))
+def test_grok_processor_first_match_wins_and_overwrite(spark, lines):
+    df = spark.createDataFrame([(v,) for v in lines], "message string")
+    out = compile_one({"grok": {"patterns": _MULTI}})(df).collect()
+    for line, r in zip(lines, out):
+        want, want_failed = _py_multi(line)
+        failed = "grok_parse_failure" in (r["_flags"] or [])
+        assert ({k: r[k] for k in want}, failed) == (want, want_failed), line
+        assert (r["_error"] is not None) == want_failed
+
+
+# --- dissect -------------------------------------------------------------------
+
+
+@st.composite
+def _dissect_batch(draw):
+    """A native-compilable tokenizer and lines built from its
+    delimiters, with values that may contain the delimiters themselves
+    (the first-occurrence rule decides where a field ends)."""
+    tok = Tokenizer(draw(tokenizers()))
+    delims = [d for d in tok.delimiters if d]
+    value = st.text(alphabet="ab " + "".join(delims), max_size=5)
+    pieces = [tok.delimiters[0]]
+    for i in range(len(tok.fields)):
+        pieces.append(value)
+        if i + 1 < len(tok.delimiters):
+            pieces.append(tok.delimiters[i + 1])
+    junk = _JUNK | st.text(alphabet="ab" + "".join(delims), max_size=10)
+    return tok, draw(_batch(pieces, junk))
+
+
+def _native_rows(spark, tok: Tokenizer, lines: list, single_pass: bool = True) -> list:
+    s = F.col("s")
+    if single_pass:
+        matched, values = tok.native_exprs(s, convert=False)
+    else:
+        n = len(tok.fields)
+        arr = capture_array(s, tok.regex(), n, empty_as_null=False, single_pass=False)
+        matched, values = tok.native_values(F.when(F.length(s) > 0, arr), convert=False)
+    rows = (
+        spark.createDataFrame([(v,) for v in lines], "s string")
+        .select(matched.alias("_m"), *[v.alias(k) for k, v in values.items()])
+        .collect()
+    )
+    return [(r["_m"], {k: r[k] for k in values} if r["_m"] else None) for r in rows]
+
+
+@EXAMPLES
+@given(case=_dissect_batch())
+def test_native_dissect_agrees_with_kernel(spark, case):
+    tok, lines = case
+    if not tok.native_compilable:
+        return
+    fast = _native_rows(spark, tok, lines)
+    assert fast == _native_rows(spark, tok, lines, single_pass=False)
+    for line, (matched, got) in zip(lines, fast):
+        assert got == tok.dissect(line), (tok.raw, line, got)
+        assert matched == (got is not None)
+
+
+@pytest.mark.parametrize(
+    "tok, line",
+    [
+        ("%{a} %{b}", "x  y"),  # first occurrence: a=x, b=" y"
+        ("%{a}-%{b}-", "1-2-3-"),  # trailing delimiter, first '-' after b
+        ("[%{a}]%{b}", "[]]z"),  # empty first field
+        ("%{a}=%{b}", "k=v" + SEP + "=w"),  # separator inside the rest
+        ("%{a}" + "".join(f"|%{{k{i}}}" for i in range(10)), "|".join(map(str, range(11)))),
+        ("%{a}", ""),  # empty input never matches, though (.*)$ would
+    ],
+)
+def test_native_dissect_first_occurrence_edges(spark, tok, line):
+    t = Tokenizer(tok)
+    assert t.native_compilable
+    [(matched, got)] = _native_rows(spark, t, [line])
+    assert got == t.dissect(line)
+    assert [(matched, got)] == _native_rows(spark, t, [line], single_pass=False)
+
+
+_FLAG_TOK = 'level=%{level} ts=%{ts} msg="%{msg}" %{message}'
+
+
+@EXAMPLES
+@given(lines=_batch([
+    "level=", _WORD | _JUNK, " ts=", _TS, ' msg="', _DATA, '" ', _DATA,
+]))
+def test_dissect_processor_trim_and_overwrite(spark, lines):
+    """The Dissect processor with trimming and an in-place overwrite of
+    its source field, against the kernel on the original line."""
+    tok = Tokenizer(_FLAG_TOK, make_trimmer("all"))
+    df = spark.createDataFrame([(v,) for v in lines], "message string")
+    cfg = {"tokenizer": _FLAG_TOK, "field": "message", "target_prefix": "",
+           "trim_values": "all"}
+    out = compile_one({"dissect": cfg})(df).collect()
+    for line, r in zip(lines, out):
+        want = tok.dissect(line)
+        failed = "dissect_parsing_error" in (r["_flags"] or [])
+        assert failed == (want is None), line
+        if want is None:
+            assert (r["level"], r["message"]) == (None, None)
+        else:
+            assert {k: r[k] for k in want} == want, line
+
+
+# --- plan shape ----------------------------------------------------------------
+
+
+def _children(node) -> list:
+    kids = node.children()
+    out = [kids.apply(i) for i in range(kids.size())]
+    if node.getClass().getSimpleName().endswith("QueryStageExec"):
+        out.append(node.plan())
+    return out
+
+
+def _operators(df) -> list:
+    """(kind, expressions) of every Filter and Project of the executed
+    plan (the final adaptive plan once the frame has run)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    ops, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "FilterExec":
+            ops.append(("Filter", [node.condition()]))
+        elif kind == "ProjectExec":
+            pl = node.projectList()
+            ops.append(("Project", [pl.apply(i) for i in range(pl.size())]))
+        stack.extend(_children(node))
+    return ops
+
+
+def _regex_uses(exprs: list, regex: str) -> tuple[int, int]:
+    """(single-pass evaluations, unguarded rlike/regexp_extract) of
+    `regex` in an operator's expressions. A per-capture node is guarded
+    when it sits in the ELSE of a CASE WHEN on the separator's instr."""
+    passes = unguarded = 0
+    stack = [(e, False) for e in exprs]
+    while stack:
+        e, guarded = stack.pop()
+        kind = e.getClass().getSimpleName()
+        kids = _children(e)
+        if kind == "RegExpReplace" and f"(?:{regex})" in kids[1].toString():
+            passes += 1
+        if kind in ("RLike", "RegExpExtract") and kids[1].toString() == regex:
+            unguarded += not guarded
+        cond = kids[0].toString() if kids else ""
+        if kind == "CaseWhen" and len(kids) % 2 and "instr(" in cond and SEP in cond:
+            stack += [(k, guarded) for k in kids[:-1]] + [(kids[-1], True)]
+        else:
+            stack += [(k, guarded) for k in kids]
+    return passes, unguarded
+
+
+@pytest.fixture(scope="module")
+def token_events(spark):
+    spark.range(1, 201).withColumnRenamed("id", "o_orderkey").createOrReplaceTempView(
+        "match_once_keys"
+    )
+    return spark.sql(token_events_sql("spark", "match_once_keys"))
+
+
+def _assert_one_pass_per_operator(df, regex: str) -> None:
+    df.collect()
+    uses = [(kind, *_regex_uses(exprs, regex)) for kind, exprs in _operators(df)]
+    assert all(p <= 1 and u == 0 for _, p, u in uses), uses
+    # the Filter Catalyst pushed below the parse copies the pass once,
+    # and one Project builds the column every field reads
+    assert sum(p for k, p, _ in uses if k == "Filter") == 1, uses
+    assert sum(p for k, p, _ in uses if k == "Project") == 1, uses
+
+
+def test_plan_grok_then_drop_event_matches_once(token_events):
+    chain = {
+        "processors": [
+            {"grok": {"field": "payload", "pattern": KV, "target_prefix": ""}},
+            {"drop_event": {"when": {"equals": {"level": "debug"}}}},
+        ]
+    }
+    _assert_one_pass_per_operator(Pipeline(chain).transform(token_events), _anchored(KV)[0])
+
+
+def test_plan_flagship_dissect_matches_once(token_events):
+    cfg = flagship_config()
+    tok = Tokenizer(cfg["processors"][0]["dissect"]["tokenizer"])
+    _assert_one_pass_per_operator(Pipeline(cfg).transform(token_events), tok.regex())

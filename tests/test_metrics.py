@@ -445,6 +445,24 @@ def test_date_histogram_gap_fill_and_pipeline_aggs(spark):
         assert out[base + i]["mavg_n_scaled"] == (10**6 * sum(w)) // len(w)
 
 
+def test_pipeline_aggs_mavg_exact_past_2_53(spark):
+    """ADVICE r5: the moving average is an exact integer floor even when
+    scale·(window sum) passes 2^53, where an IEEE `/` rounds."""
+    from beats_spark.metrics import pipeline_aggs
+
+    sums = [6_000_000_000, 7_000_000_000, 7_000_000_000]
+    b = spark.createDataFrame(list(enumerate(sums)), "bucket_idx LONG, v LONG")
+    out = {
+        r["bucket_idx"]: r["mavg_v_scaled"]
+        for r in pipeline_aggs(b, "bucket_idx", ["v"], window=3).collect()
+    }
+    s = 10**6 * sum(sums)
+    num = s - s % 3
+    assert num > 2**53 and int(float(num) / 3) != num // 3  # `/` would miss
+    assert out[2] == s // 3
+    assert out[0] == 10**6 * sums[0] and out[1] == 10**6 * sum(sums[:2]) // 2
+
+
 def test_date_histogram_min_doc_count_filters(spark):
     from beats_spark.metrics import date_histogram
 

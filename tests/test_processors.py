@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from beats_spark.processors import compile_chain, compile_one
+from tests.harness import GOLDEN_ABSENT
 
 
 def _df(spark, rows, schema):
@@ -436,7 +437,7 @@ def test_community_id_golden_pcap_logs(spark, fname):
 
     path = f"/root/reference/libbeat/common/flowhash/testdata/golden/{fname}.pcap.log"
     if not os.path.exists(path):
-        pytest.skip("reference checkout absent")
+        pytest.skip(f"{GOLDEN_ABSENT}: flowhash pcap logs")
     rows = []
     with open(path) as f:
         for i, line in enumerate(f):

@@ -1141,3 +1141,19 @@ def test_line_frequency_dedup_hand_corpus(spark):
     # max_freq=2 keeps pairs, still drops the 3x footer
     out2 = {r["doc_id"]: r for r in line_frequency_dedup(df, max_freq=2).collect()}
     assert out2[3]["n_kept"] == 0 and out2[4]["n_dropped"] == 0
+
+
+@pytest.mark.parametrize("sep", [".", "|", "\\"])
+def test_line_frequency_dedup_regex_meta_sep(spark, sep):
+    """ADVICE r5: `sep` splits literally, also when it is a regex
+    metacharacter, and reassembles with the same separator."""
+    from beats_spark.training.dedup import line_frequency_dedup
+
+    docs = [(1, sep.join(["a", "footer", "b"])), (2, sep.join(["footer", "c"]))]
+    df = spark.createDataFrame(docs, "doc_id INT, text STRING")
+    out = {r["doc_id"]: r for r in line_frequency_dedup(df, sep=sep).collect()}
+    assert (out[1]["n_kept"], out[1]["n_dropped"]) == (2, 1)
+    assert out[1]["text_clean"] == sep.join(["a", "b"])
+    assert (out[2]["n_kept"], out[2]["n_dropped"]) == (1, 1)
+    assert out[2]["text_clean"] == "c"
+
