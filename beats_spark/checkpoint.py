@@ -37,6 +37,17 @@ primitives driver-side. Unlike the previous design, correctness does
 NOT depend on spark.sql.sources.partitionOverwriteMode — partial data
 is never visible, so nothing ever needs to be overwritten in place.
 
+File sizing (the Beats `bulk_max_size` batching, as Iceberg write
+file sizing): a chunk job scans every input split and keeps only
+1/`n_chunks` of the rows, so writing each task's rows directly would
+leave one tiny file per (input split, sink). Plain chunk commits
+therefore add an AQE rebalance on the partition spec: a small chunk is
+coalesced into one writer task (one file per sink value), a big or hot
+sink is split at `spark.sql.adaptive.advisoryPartitionSizeInBytes`.
+`sinks.write_fanout` does not rebalance: it writes the whole input in
+one pass, so its files are already `n_chunks`× larger. Bucketed
+commits lay out their own files.
+
 On a 1000-executor cluster each chunk is still a full distributed job;
 n_chunks bounds the blast radius of a failure (work lost ≤ 1 chunk),
 not parallelism. Single committing driver assumed (the registrar is
@@ -56,7 +67,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from beats_spark.sinks import SINK_COL, strip_internal
+from beats_spark.sinks import SINK_COL, dead_letter_count, strip_internal
 from beats_spark.fields import ERROR_COL
 
 CHUNK_COL = "__chunk__"
@@ -393,20 +404,43 @@ class CheckpointedRunner:
         recorded per chunk in the manifest, each chunk reads under
         its own spec (result() resolves chunks individually), and
         pruning consults each file's parsed `key=value` segments, so
-        old-spec and new-spec chunks coexist in one run."""
+        old-spec and new-spec chunks coexist in one run.
+
+        Plain commits with a non-empty spec write through an AQE
+        rebalance on the spec (see the module docstring: a chunk's
+        rows are spread thinly over every input split). The manifest
+        Observation sits above the rebalance: below it, AQE would
+        replace the empty shuffle of a zero-row chunk with an empty
+        relation, the observed metrics would never be reported and
+        `obs.get` would fail."""
+        if bucket_key is not None:
+            if not num_buckets:
+                raise ValueError("bucketed commit needs num_buckets")
+            if partition_cols:
+                raise ValueError(
+                    "bucketed chunks are laid out by bucket only — "
+                    "partition_cols applies to plain commits"
+                )
+            spec: list[str] = []
+        else:
+            spec = (
+                list(partition_cols)
+                if partition_cols is not None
+                else [SINK_COL]
+            )
         out = strip_internal(out, keep=(ERROR_COL, CHUNK_COL)).drop(CHUNK_COL)
+        if spec:
+            out = out.hint("rebalance", *spec)
         # manifest stats ride the write itself via Observation — no
         # second scan of the just-written chunk (same pattern as
-        # sinks.write_fanout)
+        # sinks.write_fanout); above the rebalance, see the docstring
         obs = Observation(f"chunk-{chunk}")
         out = out.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.min("doc_id").alias("lo"),
             F.max("doc_id").alias("hi"),
-            F.sum(F.when(F.col(SINK_COL) == "dlq", 1).otherwise(0)).alias(
-                "dead"
-            ),
+            dead_letter_count().alias("dead"),
         )
         # unique attempt dir: failed attempts are never referenced
         # by the manifest, so they are invisible to readers and
@@ -422,13 +456,6 @@ class CheckpointedRunner:
         attempt_dir = os.path.join(chunk_root, f"try-{attempt}")
         bucket_meta = None
         if bucket_key is not None:
-            if not num_buckets:
-                raise ValueError("bucketed commit needs num_buckets")
-            if partition_cols:
-                raise ValueError(
-                    "bucketed chunks are laid out by bucket only — "
-                    "partition_cols applies to plain commits"
-                )
             # bucketed layout lives in the catalog; the sink partition
             # column stays a plain data column here (this store serves
             # the keyed upsert path, not the fan-out sinks)
@@ -449,11 +476,6 @@ class CheckpointedRunner:
                 "table": table,
             }
         else:
-            spec = (
-                list(partition_cols)
-                if partition_cols is not None
-                else [SINK_COL]
-            )
             w = out.write.mode("overwrite")
             if spec:
                 w = w.partitionBy(*spec)
@@ -475,14 +497,10 @@ class CheckpointedRunner:
             "files": collect_file_stats(
                 attempt_dir, extra_cols=self.stat_cols
             ),
-            "partition_spec": (
-                list(partition_cols)
-                if partition_cols is not None
-                else ([] if bucket_key is not None else [SINK_COL])
-            ),
+            "partition_spec": spec,
             "metrics": {
                 "events.published": int(stats_d["n"]),
-                "events.dead_letter": int(stats_d["dead"] or 0),
+                "events.dead_letter": int(stats_d["dead"]),
             },
             "committed_at": time.time(),
         }

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,14 +48,15 @@ class Lookup(Processor):
     def apply(self, df: DataFrame) -> DataFrame:
         spark = df.sparkSession
         dim: DataFrame | None = self.cfg.get("table")
-        if dim is None and self.cfg.get("rows"):
-            dim = spark.createDataFrame(self.cfg["rows"])
+        key = self.cfg["key_field"]
+        match = self.cfg.get("match_field", key.split(".")[-1])
+        inline = dim is None and bool(self.cfg.get("rows"))
+        if inline:
+            dim = _inline_dimension(spark, self.cfg["rows"], match)
         if dim is None and self.cfg.get("path"):
             dim = spark.read.parquet(self.cfg["path"])
         if dim is None:
             raise ValueError("lookup: one of table/rows/path required")
-        key = self.cfg["key_field"]
-        match = self.cfg.get("match_field", key.split(".")[-1])
         fields = self.cfg.get("fields") or [c for c in dim.columns if c != match]
         target = self.cfg.get("target", "")
         prefix = f"{target}." if target else ""
@@ -65,7 +66,9 @@ class Lookup(Processor):
         sel = [F.col(match).alias("__lk__")] + [
             F.col(c).alias(f"__lv_{c}__") for c in fields
         ]
-        dim_p = dim.select(*sel).dropDuplicates(["__lk__"])
+        dim_p = dim.select(*sel)
+        if not inline:
+            dim_p = dim_p.dropDuplicates(["__lk__"])
         joined = df.join(
             F.broadcast(dim_p) if self.cfg.get("broadcast", True) else dim_p,
             ev_key == F.col("__lk__"),
@@ -75,6 +78,36 @@ class Lookup(Processor):
             joined = put_field(joined, prefix + c, F.col(f"__lv_{c}__"))
             joined = joined.drop(f"__lv_{c}__")
         return joined
+
+
+def _inline_dimension(
+    spark: SparkSession, rows: list[dict], match: str
+) -> DataFrame:
+    """`rows` as a LocalRelation, deduplicated on `match` driver-side
+    (first occurrence wins). Parameterized `VALUES` plans as a local
+    table scan — no job, no Exchange — where `createDataFrame` would
+    parallelize the rows and `dropDuplicates` would add a shuffle to
+    every run. As `createDataFrame` infers them, columns are the
+    rows' keys sorted by name (missing = NULL) and ints are BIGINT."""
+    cols = sorted({c for r in rows for c in r})
+    first: dict = {}
+    for r in rows:
+        first.setdefault(r.get(match), r)
+    args: dict[str, Any] = {}
+    tuples = []
+    for i, r in enumerate(first.values()):
+        cells = []
+        for j, c in enumerate(cols):
+            p = f"p{i}_{j}"
+            args[p] = r.get(c)
+            cells.append(
+                f"CAST(:{p} AS BIGINT)" if type(args[p]) is int else f":{p}"
+            )
+        tuples.append(f"({', '.join(cells)})")
+    names = ", ".join(f"`{c.replace('`', '``')}`" for c in cols)
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})", args=args
+    )
 
 
 def _host_struct(cfg: dict[str, Any]) -> dict[str, Any]:

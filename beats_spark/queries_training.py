@@ -1997,9 +1997,11 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     ws = text.words(F.col("text"))
-    seq = F.sequence(
-        F.lit(0), F.floor((F.size(ws) - 1) / 4).cast("int")
-    )
+    # a zero-word doc has no lines (sequence(0, -1) would be [0, -1])
+    seq = F.when(
+        F.size(ws) > 0,
+        F.sequence(F.lit(0), F.floor((F.size(ws) - 1) / 4).cast("int")),
+    ).otherwise(F.array().cast("array<int>"))
     lines_arr = F.transform(
         seq, lambda i: F.array_join(F.slice(ws, i * 4 + 1, 4), " ")
     )
@@ -2021,7 +2023,8 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_line_dedup_oracle() -> str:
     return f"""
-WITH w AS (SELECT doc_id, {_WS_SQL} AS ws FROM documents),
+WITH w AS (
+  SELECT doc_id, list_filter({_WS_SQL}, x -> x <> '') AS ws FROM documents),
 lined AS (
   SELECT doc_id,
          list_transform(range((len(ws) + 3) // 4),
@@ -2029,8 +2032,11 @@ lined AS (
   FROM w),
 pl AS (
   SELECT doc_id,
+         -- the Spark side splits the joined text into lines, so a doc
+         -- with no lines reads back as one empty line
          CASE WHEN doc_id % 2 = 0
               THEN list_append(ls, 'data engine footer boilerplate')
+              WHEN len(ls) = 0 THEN ['']
               ELSE ls END AS ls
   FROM lined),
 lines AS (

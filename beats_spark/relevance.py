@@ -196,12 +196,13 @@ def significant_terms(
     emitted as the scaled integer (scale·fg·(fg·B - bg·F)) div
     (F²·bg) — pure BIGINT, so DuckDB replays every score bit-for-bit.
     Only positively-associated terms are kept (fg·B - bg·F > 0),
-    which both matches ES's behavior and keeps the integer div out
-    of trunc-vs-floor territory on negatives (Spark `div` truncates,
-    DuckDB `//` floors). Intermediates stay < 2^63 for corpora up to
-    ~10^5 fg docs × 10^7 bg docs at scale=10^6 — ANSI mode raises
-    loudly rather than wrapping past that (swap scale down or scores
-    to DOUBLE for truly huge slices; ranking is what matters there).
+    which matches ES's behavior. On negatives the twins would still
+    agree: Spark `div` and DuckDB `//` both truncate toward zero
+    (DuckDB 1.0: -7 // 2 = -3). Intermediates stay < 2^63 for
+    corpora up to ~10^5 fg docs × 10^7 bg docs at scale=10^6 — ANSI
+    mode raises loudly rather than wrapping past that (swap scale
+    down or scores to DOUBLE for truly huge slices; ranking is what
+    matters there).
 
     SCALE SHAPE: one exploded-distinct-term scan feeding ONE
     map-side-combined groupBy(term) with a conditional count for the

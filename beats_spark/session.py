@@ -50,8 +50,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        # partitioned fan-out writes: overwrite only the partitions a
-        # rerun touches (idempotent chunk replay, see checkpoint.py)
+        # partitioned fan-out writes in overwrite mode replace only the
+        # partitions they touch. Chunk replay does not rely on this:
+        # every checkpoint attempt writes to a fresh directory
+        # (checkpoint.py)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # the exotic-charset battery (readers/lines.py) needs legacy JVM
         # charset resolution; set at construction so the reader is not a

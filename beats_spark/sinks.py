@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from beats_spark.fields import ERROR_COL
@@ -31,6 +31,12 @@ SINK_COL = "sink"
 def strip_internal(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     drop = [c for c in df.columns if is_internal(c) and c not in keep]
     return df.drop(*drop) if drop else df
+
+
+def dead_letter_count() -> Column:
+    """Rows routed to the dead-letter sink; 0, not NULL, on zero rows
+    (a `sum` over no rows is NULL)."""
+    return F.count_if(F.col(SINK_COL) == "dlq")
 
 
 def route(df: DataFrame, routing: dict[str, Any]) -> DataFrame:
@@ -57,9 +63,7 @@ def write_fanout(
     out = out.observe(
         obs,
         F.count(F.lit(1)).alias("events_published"),
-        F.sum(F.when(F.col(SINK_COL) == "dlq", 1).otherwise(0)).alias(
-            "events_dead_letter"
-        ),
+        dead_letter_count().alias("events_dead_letter"),
     )
     parts = (extra_partition_cols or []) + [SINK_COL]
     out.write.partitionBy(*parts).mode(mode).parquet(out_dir)

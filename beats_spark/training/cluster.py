@@ -519,7 +519,9 @@ def neighborhood_function(
     hll_union_agg groupBy — shuffle ∝ nodes·sketch_size regardless of
     ball volume. Driver loop over a constant round count; per-round
     totals come off the round's persisted sketch table (dimension-
-    sized aggregates, never collected per node).
+    sized aggregates, never collected per node); each round's table
+    is released once the next is materialized, and the edge layout
+    and the last round's table before returning.
 
     EXACTNESS WINDOW (the q63 oracle recipe): DataSketches HLL stays
     in exact coupon mode below ~3/4·2^(lg_k-2) distincts (~3072 at
@@ -542,21 +544,28 @@ def neighborhood_function(
         F.hll_sketch_agg("__node", F.lit(lg_k)).alias("__sk")
     ).persist()
 
-    def total(t: int, sk_df: DataFrame) -> DataFrame:
+    def total(t: int, sk_df: DataFrame):
         return sk_df.agg(
             F.sum(F.hll_sketch_estimate("__sk")).cast("long").alias("nf")
-        ).select(F.lit(t).cast("int").alias("t"), "nf")
+        ).select(F.lit(t).cast("int").alias("t"), "nf").first()
 
-    out = total(0, sk)
+    # each round's total is collected as it is computed, which also
+    # materializes that round's sketch table, so the previous one can
+    # be released without being recomputed from lineage
+    totals = [total(0, sk)]
     for t in range(1, rounds + 1):
         nbr = e.join(sk, e.__dst == sk.__node).select(
             F.col("__src").alias("__node"), "__sk"
         )
-        sk = (
+        nxt = (
             nbr.unionByName(sk.select("__node", "__sk"))
             .groupBy("__node")
             .agg(F.hll_union_agg("__sk").alias("__sk"))
             .persist()
         )
-        out = out.unionByName(total(t, sk))
-    return out
+        totals.append(total(t, nxt))
+        sk.unpersist()
+        sk = nxt
+    sk.unpersist()
+    e.unpersist()
+    return edges.sparkSession.createDataFrame(totals, "t int, nf long")

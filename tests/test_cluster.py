@@ -322,3 +322,17 @@ def test_neighborhood_function_validation_and_isolated(spark):
     with pytest.raises(ValueError):
         cluster.neighborhood_function(e, n, rounds=17)
     spark.catalog.clearCache()
+
+
+def test_neighborhood_function_releases_persisted_rounds(spark):
+    """ADVICE r5: no persisted RDD outlives the call — the edge layout
+    and every round's sketch table are released, the result intact."""
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc.sc()
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src INT, dst INT")
+    n = spark.createDataFrame([(0,), (1,), (2,)], "node INT")
+    before = jsc.getPersistentRDDs().size()
+    out = cluster.neighborhood_function(e, n, rounds=3)
+    assert jsc.getPersistentRDDs().size() == before
+    assert {r["t"]: r["nf"] for r in out.collect()} == {0: 3, 1: 6, 2: 9, 3: 9}
+    assert jsc.getPersistentRDDs().size() == before

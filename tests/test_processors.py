@@ -651,3 +651,33 @@ def test_kv_processor(spark):
         compile_one(
             {"kv": {"field": "nope", "field_split": " ", "value_split": "="}}
         )(df)
+
+
+def test_inline_lookup_first_wins_without_shuffle(spark):
+    """`lookup` with inline `rows`: a duplicate key resolves to its
+    first row, quotes and NULLs survive, and the dimension is a local
+    relation — the executed plan has no shuffle Exchange."""
+    import re
+
+    events = _df(spark, [("a",), ("b",), ("c",), ("z",)], "k string")
+    rows = [
+        {"k": "a", "team": "first", "n": 1},
+        {"k": "b", "team": "it's \"q\"", "n": None},
+        {"k": "a", "team": "second", "n": 2},
+        {"k": "c", "team": None, "n": 3},
+    ]
+    out = compile_one(
+        {"lookup": {"rows": rows, "key_field": "k", "target": "lk"}}
+    )(events)
+    got = {r.k: (r.lk.team, r.lk.n) for r in out.collect()}
+    assert got == {
+        "a": ("first", 1),
+        "b": ("it's \"q\"", None),
+        "c": (None, 3),
+        "z": (None, None),
+    }
+    # columns and types as createDataFrame infers them from dicts
+    assert out.select("lk.*").dtypes == [("n", "bigint"), ("team", "string")]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan

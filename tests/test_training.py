@@ -1143,6 +1143,33 @@ def test_line_frequency_dedup_hand_corpus(spark):
     assert out2[3]["n_kept"] == 0 and out2[4]["n_dropped"] == 0
 
 
+def test_q97_zero_word_docs_match_duckdb_twin(spark, tmp_path):
+    """ADVICE r5: a doc with no words has no 4-word lines (Spark's
+    sequence(0, -1) used to give it two empty ones); q97 and its DuckDB
+    twin agree on empty and whitespace-only docs, odd and even ids."""
+    import duckdb
+
+    from beats_spark.queries_training import q_line_dedup, q_line_dedup_oracle
+    from tests.harness import duck_rows, spark_rows
+
+    docs = [
+        (1, ""), (2, ""), (3, "   "), (4, " \t "),
+        (5, "one two three four five"), (6, "one two three four"), (7, "solo"),
+    ]
+    spark.createDataFrame(docs, "doc_id BIGINT, text STRING").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet/*.parquet'"
+    )
+    got = spark_rows(q_line_dedup(spark, str(tmp_path)))
+    assert got == duck_rows(con, q_line_dedup_oracle())
+    n_lines = {r[1]: r[2] + r[3] for r in got}  # cksum, doc_id, n_dropped, n_kept
+    assert n_lines[1] == n_lines[3] == 1  # odd, no words: one empty line
+    assert n_lines[2] == n_lines[4] == 1  # even, no words: the footer only
+
+
 @pytest.mark.parametrize("sep", [".", "|", "\\"])
 def test_line_frequency_dedup_regex_meta_sep(spark, sep):
     """ADVICE r5: `sep` splits literally, also when it is a regex
