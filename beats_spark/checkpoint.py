@@ -73,6 +73,23 @@ from beats_spark.fields import ERROR_COL
 CHUNK_COL = "__chunk__"
 
 
+def _next_attempt_dir(root: str) -> tuple[int, str]:
+    """The next unused `try-<n>` attempt number under `root` and its dir
+    (n = 1 + the attempts already there)."""
+    attempt = 1
+    if os.path.isdir(root):
+        attempt += sum(1 for d in os.listdir(root) if d.startswith("try-"))
+    return attempt, os.path.join(root, f"try-{attempt}")
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    """Union by column name; a column missing from some frame is NULL there."""
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    return out
+
+
 def _bucket_table_prefix(data_dir: str, run_id: str) -> str:
     """Catalog-safe UNIQUE prefix for a run's bucketed chunk tables.
     The sanitized run_id alone is not unique — two runners with the
@@ -448,12 +465,7 @@ class CheckpointedRunner:
         chunk_root = os.path.join(
             self.data_dir, self.run_id, f"chunk={chunk}"
         )
-        attempt = 1
-        if os.path.isdir(chunk_root):
-            attempt += sum(
-                1 for d in os.listdir(chunk_root) if d.startswith("try-")
-            )
-        attempt_dir = os.path.join(chunk_root, f"try-{attempt}")
+        attempt, attempt_dir = _next_attempt_dir(chunk_root)
         bucket_meta = None
         if bucket_key is not None:
             # bucketed layout lives in the catalog; the sink partition
@@ -547,17 +559,9 @@ class CheckpointedRunner:
         ]
         if len(mine) <= 1:
             return 0
-        frames = [self.spark.read.parquet(e["path"]) for e in mine]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
+        out = _union_all([self.spark.read.parquet(e["path"]) for e in mine])
         comp_root = os.path.join(self.data_dir, self.run_id, "compacted")
-        attempt = 1
-        if os.path.isdir(comp_root):
-            attempt += sum(
-                1 for d in os.listdir(comp_root) if d.startswith("try-")
-            )
-        attempt_dir = os.path.join(comp_root, f"try-{attempt}")
+        _, attempt_dir = _next_attempt_dir(comp_root)
         if zorder_cols:
             from beats_spark import layout
 
@@ -728,10 +732,7 @@ class CheckpointedRunner:
                 f"all committed chunks of run {self.run_id!r} are empty "
                 "(0 rows) — no schema to materialize"
             )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
+        return _union_all(frames)
 
     def result_latest(
         self,
@@ -844,10 +845,7 @@ class CheckpointedRunner:
                     newer.select(key), on=key, how="left_anti"
                 )
             frames.append(cur.withColumn(CHUNK_COL, F.lit(e["chunk_id"])))
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return _apply_tombstone_filter(out, deleted_col, version)
+        return _apply_tombstone_filter(_union_all(frames), deleted_col, version)
 
     def materialize_latest(
         self,

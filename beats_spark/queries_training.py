@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from beats_spark.queries import query
 from beats_spark.training import dedup, similarity, text
 
 
@@ -33,6 +34,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q11_dedup_exact", q_dedup_exact)
 def q_dedup_exact_oracle() -> str:
     return """
 WITH unioned AS (
@@ -67,6 +69,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q12_text_stats", q_text_stats)
 def q_text_stats_oracle() -> str:
     hits = {
         lang: (
@@ -114,6 +117,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q13_cosine_topk", q_cosine_topk)
 def q_cosine_topk_oracle() -> str:
     return """
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 3),
@@ -150,6 +154,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
+@query("q14_jaccard_pairs", q_jaccard_pairs)
 def q_jaccard_pairs_oracle() -> str:
     sh = (
         "list_distinct(list_transform(range(1, greatest(len(ws) - 2, 0) + 1), "
@@ -205,6 +210,7 @@ def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
+@query("q60_winnow", q_winnow)
 def q_winnow_oracle() -> str:
     split = "string_split_regex(regexp_replace(text, '^\\s+|\\s+$', '', 'g'), '\\s+')"
     gram = (
@@ -263,6 +269,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q61_stratified_sample", q_stratified_sample)
 def q_stratified_sample_oracle() -> str:
     return """
 WITH ranked AS (
@@ -296,6 +303,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q64_weighted_sample", q_weighted_sample)
 def q_weighted_sample_oracle() -> str:
     return """
 WITH t AS (
@@ -347,6 +355,7 @@ def q_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
+@query("q15_multiline", q_multiline)
 def q_multiline_oracle() -> str:
     return """
 WITH lines AS (
@@ -397,6 +406,7 @@ def q_token_window_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q24_token_window_dups", q_token_window_dups)
 def q_token_window_dups_oracle() -> str:
     from beats_spark.datagen import token_events_sql
 
@@ -442,6 +452,7 @@ def q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q83_substring_spans", q_substring_spans)
 def q_substring_spans_oracle() -> str:
     from beats_spark.datagen import token_events_sql
 
@@ -493,6 +504,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_topk(docs, target, k=20, n_buckets=1024)
 
 
+@query("q84_dsir_select", q_dsir_select)
 def q_dsir_select_oracle() -> str:
     from beats_spark.training.curate import dsir_bucket_sql, ngram_all_sql
 
@@ -555,6 +567,7 @@ def q_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q86_perplexity_filter", q_perplexity_filter)
 def q_perplexity_filter_oracle() -> str:
     from beats_spark.datagen import token_events_sql
 
@@ -634,6 +647,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q87_bpe_encode", q_bpe_encode)
 def q_bpe_encode_oracle() -> str:
     from beats_spark.training.bpe import bpe_tokens_sql_ctes
 
@@ -680,6 +694,7 @@ def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q25_quality", q_quality)
 def q_quality_oracle() -> str:
     sw = ", ".join(f"'{w}'" for w in text.STOPWORDS["en"])
     return f"""
@@ -729,6 +744,7 @@ def q_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack.pack_stats(load_token_events(spark, sf_dir), seq_len=512)
 
 
+@query("q33_pack", q_pack)
 def q_pack_oracle() -> str:
     from beats_spark.datagen import token_events_sql
 
@@ -790,6 +806,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q30_dup_clusters", q_dup_clusters)
 def q_dup_clusters_oracle() -> str:
     from beats_spark.training import curate
 
@@ -830,6 +847,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate.contamination(corpus, bench, n=5).orderBy("doc_id")
 
 
+@query("q31_decontaminate", q_decontaminate)
 def q_decontaminate_oracle() -> str:
     from beats_spark.training import curate
 
@@ -865,6 +883,7 @@ def q_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q32_split", q_split)
 def q_split_oracle() -> str:
     return """
 WITH b AS (
@@ -904,6 +923,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q34_repetition", q_repetition)
 def q_repetition_oracle() -> str:
     from beats_spark.training import curate
 
@@ -984,6 +1004,7 @@ def q_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q35_source_mix", q_source_mix)
 def q_source_mix_oracle() -> str:
     return """
 WITH thinned AS (
@@ -1016,6 +1037,7 @@ def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q36_top_ngrams", q_top_ngrams)
 def q_top_ngrams_oracle() -> str:
     from beats_spark.training import curate
 
@@ -1071,6 +1093,7 @@ def q_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q37_scrub", q_scrub)
 def q_scrub_oracle() -> str:
     from beats_spark.training import scrub
 
@@ -1144,6 +1167,7 @@ def q_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate.funnel_counts(sig, checks, weight_col="n_chars").orderBy("stage")
 
 
+@query("q38_quality_funnel", q_quality_funnel)
 def q_quality_funnel_oracle() -> str:
     from beats_spark.training import curate
 
@@ -1198,6 +1222,7 @@ def q_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack.vocab_stats(load_token_events(spark, sf_dir), k=20).orderBy("rank")
 
 
+@query("q39_vocab", q_vocab)
 def q_vocab_oracle() -> str:
     from beats_spark.datagen import token_events_sql
 
@@ -1216,84 +1241,6 @@ tot AS (SELECT sum(n) AS total FROM h)
 SELECT rank, token, CAST(n AS BIGINT) AS n,
        CAST(round(1e6 * cum / total) AS BIGINT) AS coverage_ppm
 FROM r, tot WHERE rank <= 20 ORDER BY rank"""
-
-
-def catalog():
-    return {
-        "q11_dedup_exact": q_dedup_exact,
-        "q12_text_stats": q_text_stats,
-        "q13_cosine_topk": q_cosine_topk,
-        "q14_jaccard_pairs": q_jaccard_pairs,
-        "q15_multiline": q_multiline,
-        "q60_winnow": q_winnow,
-        "q61_stratified_sample": q_stratified_sample,
-        "q64_weighted_sample": q_weighted_sample,
-        "q24_token_window_dups": q_token_window_dups,
-        "q25_quality": q_quality,
-        "q30_dup_clusters": q_dup_clusters,
-        "q31_decontaminate": q_decontaminate,
-        "q32_split": q_split,
-        "q33_pack": q_pack,
-        "q34_repetition": q_repetition,
-        "q35_source_mix": q_source_mix,
-        "q36_top_ngrams": q_top_ngrams,
-        "q37_scrub": q_scrub,
-        "q38_quality_funnel": q_quality_funnel,
-        "q39_vocab": q_vocab,
-        "q74_pagerank": q_pagerank,
-        "q80_triangles": q_triangles,
-        "q81_bloom_decontaminate": q_bloom_decontaminate,
-        "q83_substring_spans": q_substring_spans,
-        "q84_dsir_select": q_dsir_select,
-        "q86_perplexity_filter": q_perplexity_filter,
-        "q87_bpe_encode": q_bpe_encode,
-        "q89_kcore": q_kcore,
-        "q90_normalize": q_normalize,
-        "q91_lpa_communities": q_lpa,
-        "q93_rrf_fusion": q_rrf,
-        "q94_significant_terms": q_significant_terms,
-        "q96_neighborhood": q_neighborhood,
-        "q97_line_dedup": q_line_dedup,
-    }
-
-
-def oracles():
-    return {
-        "q11_dedup_exact": q_dedup_exact_oracle(),
-        "q12_text_stats": q_text_stats_oracle(),
-        "q13_cosine_topk": q_cosine_topk_oracle(),
-        "q14_jaccard_pairs": q_jaccard_pairs_oracle(),
-        "q15_multiline": q_multiline_oracle(),
-        "q60_winnow": q_winnow_oracle(),
-        "q74_pagerank": q_pagerank_oracle(),
-        "q80_triangles": q_triangles_oracle(),
-        "q81_bloom_decontaminate": q_bloom_decontaminate_oracle(),
-        "q83_substring_spans": q_substring_spans_oracle(),
-        "q84_dsir_select": q_dsir_select_oracle(),
-        "q86_perplexity_filter": q_perplexity_filter_oracle(),
-        "q87_bpe_encode": q_bpe_encode_oracle(),
-        "q89_kcore": q_kcore_oracle(),
-        "q90_normalize": q_normalize_oracle(),
-        "q91_lpa_communities": q_lpa_oracle(),
-        "q93_rrf_fusion": q_rrf_oracle(),
-        "q94_significant_terms": q_significant_terms_oracle(),
-        "q96_neighborhood": q_neighborhood_oracle(),
-        "q97_line_dedup": q_line_dedup_oracle(),
-        "q61_stratified_sample": q_stratified_sample_oracle(),
-        "q64_weighted_sample": q_weighted_sample_oracle(),
-        "q24_token_window_dups": q_token_window_dups_oracle(),
-        "q25_quality": q_quality_oracle(),
-        "q30_dup_clusters": q_dup_clusters_oracle(),
-        "q31_decontaminate": q_decontaminate_oracle(),
-        "q32_split": q_split_oracle(),
-        "q33_pack": q_pack_oracle(),
-        "q34_repetition": q_repetition_oracle(),
-        "q35_source_mix": q_source_mix_oracle(),
-        "q36_top_ngrams": q_top_ngrams_oracle(),
-        "q37_scrub": q_scrub_oracle(),
-        "q38_quality_funnel": q_quality_funnel_oracle(),
-        "q39_vocab": q_vocab_oracle(),
-    }
 
 
 # --- q74: link-graph authority rank (exact integer PageRank) -----------------
@@ -1336,6 +1283,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q74_pagerank", q_pagerank)
 def q_pagerank_oracle() -> str:
     return """
 WITH nn AS (SELECT COUNT(*) AS n FROM documents),
@@ -1400,6 +1348,7 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q80_triangles", q_triangles)
 def q_triangles_oracle() -> str:
     return """
 WITH nn AS (SELECT COUNT(*) AS n FROM documents),
@@ -1467,6 +1416,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+@query("q81_bloom_decontaminate", q_bloom_decontaminate)
 def q_bloom_decontaminate_oracle() -> str:
     from beats_spark.training import curate
 
@@ -1548,6 +1498,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q89_kcore", q_kcore)
 def q_kcore_oracle() -> str:
     rounds = []
     for r in range(1, 9):
@@ -1640,6 +1591,7 @@ def q_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+@query("q90_normalize", q_normalize)
 def q_normalize_oracle() -> str:
     return r"""
 WITH d AS (
@@ -1719,6 +1671,7 @@ def q_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q91_lpa_communities", q_lpa)
 def q_lpa_oracle() -> str:
     rounds = []
     for r in range(1, 5):
@@ -1822,6 +1775,7 @@ def q_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q93_rrf_fusion", q_rrf)
 def q_rrf_oracle() -> str:
     return f"""
 WITH vq AS (
@@ -1894,6 +1848,7 @@ def q_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q94_significant_terms", q_significant_terms)
 def q_significant_terms_oracle() -> str:
     return f"""
 WITH corpus AS (
@@ -1952,6 +1907,7 @@ def q_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cluster.neighborhood_function(edges, nodes, rounds=3).orderBy("t")
 
 
+@query("q96_neighborhood", q_neighborhood)
 def q_neighborhood_oracle() -> str:
     return """
 WITH nn AS (SELECT COUNT(*) AS n FROM documents),
@@ -2021,6 +1977,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+@query("q97_line_dedup", q_line_dedup)
 def q_line_dedup_oracle() -> str:
     return f"""
 WITH w AS (

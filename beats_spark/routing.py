@@ -88,6 +88,21 @@ def _rule_value(df: DataFrame, rule: dict[str, Any]) -> Column:
     return val
 
 
+def _selector(df: DataFrame, head: Column | None, cfg: dict[str, Any]) -> Column:
+    """First non-NULL of the override `head`, each rule and the default
+    (a coalesce is the ordered when-chain, select.go:337-399), then the
+    optional lowercase. NULL when there is nothing to select from."""
+    chain = [] if head is None else [head]
+    chain += [_rule_value(df, rule) for rule in cfg.get("rules", [])]
+    if cfg.get("default") is not None:
+        chain.append(format_string_col(df, str(cfg["default"])))
+    if not chain:
+        expr = F.lit(None).cast("string")
+    else:
+        expr = F.coalesce(*chain) if len(chain) > 1 else chain[0]
+    return F.lower(expr) if cfg.get("lowercase", True) else expr
+
+
 def sink_column(df: DataFrame, routing: dict[str, Any]) -> Column:
     """Compile a routing config into the `sink` Column.
 
@@ -98,22 +113,7 @@ def sink_column(df: DataFrame, routing: dict[str, Any]) -> Column:
       "lowercase": True,
     }
     """
-    rules = routing.get("rules", [])
-    default = routing.get("default")
-    expr = F.lit(None).cast("string")
-    # build right-to-left: coalesce(first-match) == ordered when-chain
-    chain: list[Column] = []
-    raw_index = field_col(df, "@metadata.raw_index")
-    if raw_index is not None:
-        chain.append(raw_index)
-    for rule in rules:
-        chain.append(_rule_value(df, rule))
-    if default is not None:
-        chain.append(format_string_col(df, str(default)))
-    if chain:
-        expr = F.coalesce(*chain) if len(chain) > 1 else chain[0]
-    if routing.get("lowercase", True):
-        expr = F.lower(expr)
+    expr = _selector(df, field_col(df, "@metadata.raw_index"), routing)
     dead = routing.get("dead_letter")
     if dead is not None and ERROR_COL in df.columns:
         expr = F.when(F.col(ERROR_COL).isNotNull(), F.lit(dead)).otherwise(expr)
@@ -138,20 +138,9 @@ def pipeline_column(df: DataFrame, cfg: dict[str, Any]) -> Column:
     lacks the pipeline key; a columnar row has no nil-map distinction,
     so here a NULL @metadata.pipeline falls through to the selector.
     """
-    chain: list[Column] = []
     meta_p = field_col(df, "@metadata.pipeline")
-    if meta_p is not None:
-        chain.append(F.lower(meta_p.cast("string")))
-    for rule in cfg.get("rules", []):
-        chain.append(_rule_value(df, rule))
-    default = cfg.get("default")
-    if default is not None:
-        chain.append(format_string_col(df, str(default)))
-    if not chain:
-        return F.lit(None).cast("string")
-    expr = F.coalesce(*chain) if len(chain) > 1 else chain[0]
-    if cfg.get("lowercase", True):
-        expr = F.lower(expr)
+    head = None if meta_p is None else F.lower(meta_p.cast("string"))
+    expr = _selector(df, head, cfg)
     return F.when(expr == "", F.lit(None)).otherwise(expr)
 
 

@@ -112,17 +112,21 @@ def encode_ppm(img: np.ndarray) -> bytes:
     return b"P6\n%d %d\n255\n" % (w, h) + img.astype(np.uint8).tobytes()
 
 
-def ppm_features(payload: bytes) -> list[float]:
-    """Integer-exact image features: [tag, w, h, r_ppm, g_ppm, b_ppm,
-    maxval, n_pixels] with ch_ppm = (1e6 · channel_sum) //
-    (255 · n_pixels) / 1e6 — every value re-derivable in SQL from the
-    planting arithmetic."""
-    img = decode_ppm(payload)
+def _rgb_features(img: np.ndarray) -> list[float]:
+    """Integer-exact image features of a decoded (h, w, 3|4) image:
+    [tag, w, h, r_ppm, g_ppm, b_ppm, maxval, n_pixels] with ch_ppm =
+    (1e6 · channel_sum) // (255 · n_pixels) / 1e6 over the RGB channels
+    (alpha excluded) — every value re-derivable in SQL from the planting
+    arithmetic, and equal for any two formats of the same pixels."""
     h, w = img.shape[0], img.shape[1]
     n = w * h
-    sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+    sums = img[..., :3].reshape(-1, 3).sum(axis=0, dtype=np.int64)
     ch = [float((1_000_000 * int(s)) // (255 * n)) / 1e6 for s in sums]
     return [IMAGE_TAG, float(w), float(h), *ch, 255.0, float(n)]
+
+
+def ppm_features(payload: bytes) -> list[float]:
+    return _rgb_features(decode_ppm(payload))
 
 
 def bilinear_resize(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -316,14 +320,7 @@ def encode_bmp(img: np.ndarray) -> bytes:
 
 
 def bmp_features(payload: bytes) -> list[float]:
-    """Same integer-exact feature layout as ppm_features — decoding a
-    BMP and a PPM of the same pixels yields identical features."""
-    img = decode_bmp(payload)
-    h, w = img.shape[0], img.shape[1]
-    n = w * h
-    sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-    ch = [float((1_000_000 * int(s)) // (255 * n)) / 1e6 for s in sums]
-    return [IMAGE_TAG, float(w), float(h), *ch, 255.0, float(n)]
+    return _rgb_features(decode_bmp(payload))
 
 
 def bmp_resize(payload: bytes, w: int, h: int) -> bytes:
@@ -542,15 +539,7 @@ def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
 
 
 def png_features(payload: bytes) -> list[float]:
-    """Same integer-exact feature layout as ppm_features, computed over
-    the RGB channels (alpha excluded so a PNG and a PPM of the same
-    pixels yield identical features)."""
-    img = decode_png(payload)
-    h, w = img.shape[0], img.shape[1]
-    n = w * h
-    sums = img[..., :3].reshape(-1, 3).sum(axis=0, dtype=np.int64)
-    ch = [float((1_000_000 * int(s)) // (255 * n)) / 1e6 for s in sums]
-    return [IMAGE_TAG, float(w), float(h), *ch, 255.0, float(n)]
+    return _rgb_features(decode_png(payload))
 
 
 def png_resize(payload: bytes, w: int, h: int) -> bytes:
@@ -1178,14 +1167,7 @@ def encode_jpeg(
 
 
 def jpeg_features(payload: bytes) -> list[float]:
-    """Same integer-exact feature layout as ppm_features — a JPEG, PNG,
-    BMP and PPM of the same decoded pixels yield identical features."""
-    img = decode_jpeg(payload)
-    h, w = img.shape[0], img.shape[1]
-    n = w * h
-    sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-    ch = [float((1_000_000 * int(s)) // (255 * n)) / 1e6 for s in sums]
-    return [IMAGE_TAG, float(w), float(h), *ch, 255.0, float(n)]
+    return _rgb_features(decode_jpeg(payload))
 
 
 def jpeg_resize(payload: bytes, w: int, h: int) -> bytes:
@@ -1629,15 +1611,8 @@ def encode_gif(
 
 
 def gif_features(payload: bytes) -> list[float]:
-    """Same integer-exact feature layout as ppm_features, over the
-    first composited frame — a GIF and a PPM of the same pixels yield
-    identical features."""
-    img = decode_gif(payload)
-    h, w = img.shape[0], img.shape[1]
-    n = w * h
-    sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-    ch = [float((1_000_000 * int(s)) // (255 * n)) / 1e6 for s in sums]
-    return [IMAGE_TAG, float(w), float(h), *ch, 255.0, float(n)]
+    """Features of the first composited frame."""
+    return _rgb_features(decode_gif(payload))
 
 
 def gif_frame_sample(payload: bytes, n_frames: int) -> list[tuple[int, int, bytes]]:
@@ -2806,15 +2781,7 @@ def encode_webp(img: np.ndarray, **kw) -> bytes:
 
 
 def webp_features(payload: bytes) -> list[float]:
-    """Same integer-exact feature layout as ppm_features, over the RGB
-    channels (alpha excluded) — a WebP, PNG and PPM of the same pixels
-    yield identical features."""
-    img = decode_webp(payload)
-    h, w = img.shape[0], img.shape[1]
-    n = w * h
-    sums = img.reshape(-1, img.shape[2])[:, :3].sum(axis=0, dtype=np.int64)
-    ch = [float((1_000_000 * int(s)) // (255 * n)) / 1e6 for s in sums]
-    return [IMAGE_TAG, float(w), float(h), *ch, 255.0, float(n)]
+    return _rgb_features(decode_webp(payload))
 
 
 def webp_resize(payload: bytes, w: int, h: int) -> bytes:

@@ -24,6 +24,7 @@ Schema convention:
 
 from __future__ import annotations
 
+import functools
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
@@ -76,56 +77,53 @@ def _fake_decode(payload: bytes, dim: int = 8) -> list[float]:
     return [((1_000_000 * a) // (255 * n)) / 1e6 for a in acc]
 
 
+# Real kernels by sniffed format (_MAGIC_CHAIN names). A row gets one
+# only when the payload's sniffed kind is the row's kind; anything else
+# (a WAV payload in an image row, mp3/ogg/mp4 with no kernel yet) gets
+# the byte-hash stub.
+_FEATURES: dict[str, Callable[[bytes], list[float]]] = {
+    "ppm": media_codecs.ppm_features,
+    "bmp": media_codecs.bmp_features,
+    "png": media_codecs.png_features,
+    "jpeg": media_codecs.jpeg_features,
+    "gif": media_codecs.gif_features,
+    "webp": media_codecs.webp_features,
+    "wav": media_codecs.wav_features,
+    "flac": media_codecs.flac_features,
+    "avi": media_codecs.avi_features,
+}
+_RESIZES: dict[str, Callable[[bytes, int, int], bytes]] = {
+    "ppm": media_codecs.ppm_resize,
+    "bmp": media_codecs.bmp_resize,
+    "png": media_codecs.png_resize,
+    "jpeg": media_codecs.jpeg_resize,
+    "gif": media_codecs.gif_resize,
+    "webp": media_codecs.webp_resize,
+    "avi": media_codecs.avi_resize,
+}
+
+
+def _kernel(table: dict, kind: str, payload: bytes):
+    """The real kernel of `table` for this payload's sniffed format when
+    that format is of `kind`, else None."""
+    fmt = _sniff_one(payload)
+    return table.get(fmt) if _FORMAT_KIND.get(fmt) == kind else None
+
+
+def _default_decode(kind: str, payload: bytes) -> list[float]:
+    return (_kernel(_FEATURES, kind, payload) or _fake_decode)(payload)
+
+
 def _default_image_decode(payload: bytes) -> list[float]:
-    """Real decode for PPM, BMP, PNG, baseline JPEG, GIF and lossless
-    WebP — every image format the sniff chain knows (the pure-numpy
-    kernels in media_codecs); byte-hash stub fallback only for
-    non-image kinds routed here by an explicit kind column."""
-    if payload[:2] == b"P6":
-        return media_codecs.ppm_features(payload)
-    if payload[:2] == b"BM":
-        return media_codecs.bmp_features(payload)
-    if payload[:8] == media_codecs._PNG_SIG:
-        return media_codecs.png_features(payload)
-    if payload[:3] == b"\xff\xd8\xff":
-        return media_codecs.jpeg_features(payload)
-    if payload[:4] == b"GIF8":
-        return media_codecs.gif_features(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        return media_codecs.webp_features(payload)
-    return _fake_decode(payload)
-
-
-def _default_audio_decode(payload: bytes) -> list[float]:
-    """Real decode for RIFF/WAVE (PCM16 and IMA ADPCM) and FLAC
-    (lossless Rice/predictor streams); stub fallback only for the
-    perceptual codecs (mp3/ogg need a registered kernel)."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return media_codecs.wav_features(payload)
-    if payload[:4] == b"fLaC":
-        return media_codecs.flac_features(payload)
-    return _fake_decode(payload)
-
-
-def _default_video_decode(payload: bytes) -> list[float]:
-    """Real decode for AVI with raw DIB frames (the uncompressed video
-    profile); stub fallback for compressed containers (mp4/mkv need a
-    registered kernel)."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return media_codecs.avi_features(payload)
-    return _fake_decode(payload)
+    return _default_decode("image", payload)
 
 
 def _real_decode(kind: str):
     fn = _DECODERS.get(kind)
     if fn is not None:
         return fn
-    if kind == "image":
-        return _default_image_decode
-    if kind == "audio":
-        return _default_audio_decode
-    if kind == "video":
-        return _default_video_decode
+    if kind in ("image", "audio", "video"):
+        return functools.partial(_default_decode, kind)
     raise NotImplementedError(f"no decoder registered for media kind {kind!r}")
 
 
@@ -151,6 +149,7 @@ _MAGIC_CHAIN: "list[tuple[bytes, int, bytes | None, str, str]]" = [
     # are the ftyp box size, which varies)
     (b"ftyp", 4, None, "mp4", "video"),
 ]
+_FORMAT_KIND = {name: kind for _, _, _, name, kind in _MAGIC_CHAIN}
 
 
 def sniff_media_meta(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -278,31 +277,12 @@ def _fake_resize(payload: bytes, w: int, h: int) -> bytes:
     return bytes(payload[(i * ln) // n] for i in range(n))
 
 
+def _default_resize(kind: str, payload: bytes, w: int, h: int) -> bytes:
+    return (_kernel(_RESIZES, kind, payload) or _fake_resize)(payload, w, h)
+
+
 def _default_image_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Real resize for PPM/BMP/PNG/JPEG (bilinear) and GIF
-    (palette-preserving nearest); byte-resample stub fallback for the
-    formats still lacking a kernel."""
-    if payload[:2] == b"P6":
-        return media_codecs.ppm_resize(payload, w, h)
-    if payload[:2] == b"BM":
-        return media_codecs.bmp_resize(payload, w, h)
-    if payload[:8] == media_codecs._PNG_SIG:
-        return media_codecs.png_resize(payload, w, h)
-    if payload[:3] == b"\xff\xd8\xff":
-        return media_codecs.jpeg_resize(payload, w, h)
-    if payload[:4] == b"GIF8":
-        return media_codecs.gif_resize(payload, w, h)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        return media_codecs.webp_resize(payload, w, h)
-    return _fake_resize(payload, w, h)
-
-
-def _default_video_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Real per-frame bilinear resize for raw-DIB AVI; byte-resample
-    stub fallback for compressed containers."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return media_codecs.avi_resize(payload, w, h)
-    return _fake_resize(payload, w, h)
+    return _default_resize("image", payload, w, h)
 
 
 def resize_media(
@@ -343,13 +323,7 @@ def resize_media(
                 payload = bytes(raw) if raw is not None else b""
                 kind = kind_vals[idx] if kind_vals is not None else default_kind
                 keys.append(key_vals[idx])
-                fn = _RESIZERS.get(kind) or (
-                    _default_image_resize
-                    if kind == "image"
-                    else _default_video_resize
-                    if kind == "video"
-                    else _fake_resize
-                )
+                fn = _RESIZERS.get(kind) or functools.partial(_default_resize, kind)
                 try:
                     outs.append(fn(payload, width, height))
                     errs.append(None)
@@ -372,6 +346,11 @@ def resize_media(
 FRAME_SCHEMA = "key string, frame_idx int, ts_ms long, frame binary"
 
 _SAMPLERS: dict[str, Callable[[bytes, int], list]] = {}
+_BUILTIN_SAMPLERS: dict[str, Callable[[bytes, int], list]] = {
+    "gif": media_codecs.gif_frame_sample,
+    "webp": media_codecs.webp_frame_sample,
+    "avi": media_codecs.avi_frame_sample,
+}
 
 
 def register_sampler(fmt: str, fn: Callable[[bytes, int], list]) -> None:
@@ -389,13 +368,7 @@ def _real_frame_sample(payload: bytes, n_frames: int):
     no real sampler applies — caller falls back to the deterministic
     byte-slice stub."""
     fmt = _sniff_one(payload)
-    fn = _SAMPLERS.get(fmt)
-    if fn is None and fmt == "gif":
-        fn = media_codecs.gif_frame_sample
-    if fn is None and fmt == "webp":
-        fn = media_codecs.webp_frame_sample
-    if fn is None and fmt == "avi":
-        fn = media_codecs.avi_frame_sample
+    fn = _SAMPLERS.get(fmt) or _BUILTIN_SAMPLERS.get(fmt)
     return fn(payload, n_frames) if fn is not None else None
 
 
