@@ -26,8 +26,9 @@ Two execution strategies, chosen at compile time:
    the row with one `regexp_replace` into the separated captures and
    one `split` turns them into an array; each field is one `get` from
    it and the match predicate is its size. The Dissect processor
-   materializes the array as a column first, so a Filter Catalyst
-   pushes below the parse (drop_event on a key) copies one evaluation.
+   materializes the array in a Generate (`fields.materialize`) first,
+   so a Filter on a key (drop_event) stays above it and the plan
+   evaluates the pattern once per row.
    Rows containing the separator (U+0000) take the exact rlike +
    regexp_extract path behind a guard. Eligible when there are no
    fixed-length, pointer or indirect fields and greedy padding only
@@ -434,9 +435,10 @@ class Tokenizer:
     def capture_array(self, src: Column) -> Column:
         """Every field's raw capture of the native regex in ONE pass
         (`regex.capture_array`); NULL for the empty string, which the Go
-        algorithm never matches. Materialize it before reading it from
-        more than one expression (see processors.parse.Dissect)."""
-        arr = capture_array(src, self.regex(), len(self.fields), empty_as_null=False)
+        algorithm never matches. Materialize it with `fields.materialize`
+        before reading it from more than one expression (see
+        processors.parse.Dissect)."""
+        arr = capture_array(src, self.regex(), len(self.fields))
         return F.when(F.length(src) > 0, arr)
 
     def native_values(

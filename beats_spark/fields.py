@@ -194,6 +194,22 @@ def put_fields(df: DataFrame, values: dict[str, Column]) -> DataFrame:
     return df.withColumns(out)
 
 
+def materialize(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
+    """Add `cols` as computed columns that Catalyst cannot re-inline.
+
+    `withColumn` is a plain projection: a Filter pushed below it, or a
+    second projection collapsed into it, gets a copy of the aliased
+    expression at every reference. Here the columns come out of ONE
+    `Generate` that emits exactly one row per input row (inline of a
+    one-element array of structs). A Filter moves below a Generate only
+    when it reads none of the generator's output, so filters on these
+    columns stay above it and read the attribute, while filters on input
+    columns (include_lines, a checkpoint chunk filter) still run before
+    the columns are computed. The Generate stays in whole-stage codegen."""
+    row = F.struct(*[c.alias(n) for n, c in cols.items()])
+    return df.select("*", F.inline(F.array(row)))
+
+
 def drop_field(df: DataFrame, path: str) -> DataFrame:
     """Delete analog (`event.go:268-276`); no-op when absent."""
     if not has_field(df.schema, path):

@@ -7,10 +7,12 @@ ES ingest carry grok), so this is the grok half: a pattern library +
 compiler in the spirit of logstash-patterns-core, emitting expressions
 that stay in whole-stage codegen. One `regexp_replace` + `split`
 (`regex.capture_array`) builds an array of every capture of the first
-match; each field is one `get` from it, the match predicate is its
-size, types via try_cast. The Grok processor materializes that array
-as a column before any field reads it, so a Filter Catalyst pushes
-below the parse copies one evaluation and the projection none. Rows
+match; each field is one `get` from it (empty → NULL via `nullif`),
+the match predicate is its size, types via try_cast. The Grok
+processor materializes the arrays of all its patterns in one
+`Generate` (`fields.materialize`) before any field reads them, so the
+plan evaluates each pattern once per row: a Filter on a capture stays
+above the Generate and reads the column. Rows
 that contain the array's separator (U+0000), unanchored patterns and
 MULTILINE/COMMENTS-flagged ones take the exact per-capture path (rlike
 + one regexp_extract per field) instead.
@@ -35,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from beats_spark.regex import capture, capture_array, capture_matched, jvm_safe
-from beats_spark.fields import add_flag, field_col, put_fields
+from beats_spark.fields import add_flag, field_col, materialize, put_fields
 from beats_spark.processors.base import Processor, register
 from beats_spark.processors.shape import _set_error
 
@@ -277,20 +279,17 @@ def grok_captures(
     regex, captures = compile_grok(pattern, extra_patterns)
     if anchored and not regex.startswith("^"):
         regex = "^" + regex
-    arr = capture_array(
-        src, regex, len(captures), empty_as_null=True, single_pass=anchored
-    )
-    return arr, captures
+    return capture_array(src, regex, len(captures), single_pass=anchored), captures
 
 
 def grok_values(
     arr: Column, captures: list[tuple[str, str | None]]
 ) -> tuple[Column, dict[str, Column]]:
     """(matched_predicate, {field: value Column}) read from a capture
-    array — one reference to it per field, typed via try_cast."""
+    array — empty captures are NULL (`nullif`), typed via try_cast."""
     values: dict[str, Column] = {}
     for i, (field, typ) in enumerate(captures):
-        v = capture(arr, i)
+        v = F.nullif(capture(arr, i), F.lit(""))
         values[field] = v if typ is None else v.try_cast(typ)
     return capture_matched(arr, len(captures)), values
 
@@ -304,8 +303,9 @@ def grok_columns(
     """(matched_predicate, {field: value Column}) — all JVM-side: one
     regexp_replace + split builds every capture at once; empty
     captures are NULL, casts via try_cast. The expressions share one
-    unmaterialized capture array; a processor that filters on them
-    should materialize it first (see Grok.apply)."""
+    unmaterialized capture array, which every reference copies; a
+    processor should materialize it first (`fields.materialize`, see
+    Grok.apply)."""
     return grok_values(*grok_captures(src, pattern, extra_patterns, anchored))
 
 
@@ -342,20 +342,20 @@ class Grok(Processor):
         tp = self.cfg.get("target_prefix", "")
         prefix = (tp + ".") if tp else ""
         anchored = self.cfg.get("anchored", True)
-        # ONE capture array per pattern, materialized from the ORIGINAL
-        # source before any field reads it: each field then holds a
-        # single reference, so the Filter Catalyst pushes down (e.g.
-        # drop_event on a capture) copies the pattern's evaluation once
-        # and the projection reads the column it already built; and a
-        # capture that overwrites the source field itself (ES grok's
-        # in-place `message` overwrite, e.g. kafka/icinga pipelines)
-        # cannot poison the other captures
+        # ONE capture array per pattern, all built in one Generate from
+        # the ORIGINAL source before any field reads them: a Filter on a
+        # capture (drop_event) cannot be pushed below the Generate, so
+        # the plan evaluates each pattern once per row and every read
+        # (nullif, first-match-wins) is of a column; and a capture that
+        # overwrites the source field itself (ES grok's in-place
+        # `message` overwrite, e.g. kafka/icinga pipelines) cannot
+        # poison the other captures
         parsed = [
             grok_captures(src.cast("string"), p, extra, anchored=anchored)
             for p in pats
         ]
         arrs = {f"__grok_arr_{k}__": arr for k, (arr, _) in enumerate(parsed)}
-        df = df.withColumns(arrs)
+        df = materialize(df, arrs)
         matched_any: Column | None = None
         fields: dict[str, Column] = {}
         for name, (_, captures) in zip(arrs, parsed):

@@ -26,6 +26,7 @@ from beats_spark.fields import (
     drop_field,
     field_col,
     field_type,
+    materialize,
     put_field,
     put_fields,
 )
@@ -67,14 +68,15 @@ class Dissect(Processor):
             return _set_error(df, F.lit(True), f"dissect: missing field {self.field}")
         convert = self.tok.wants_convert
         if self.tok.native_compilable:
-            # materialize the capture array, then write every key in ONE
-            # batched projection of single array reads: the Filter that
-            # Catalyst pushes down (drop_event on a key) then copies the
-            # pattern's one evaluation, a per-key put_field chain cannot
-            # re-inline quadratically, and an in-place overwrite of the
-            # source field (target_prefix "") cannot poison later keys
-            # or the failure flag (same fix as Grok / put_fields)
-            df = df.withColumn("__dissect_arr__", self.tok.capture_array(src))
+            # materialize the capture array in a Generate, then write
+            # every key in ONE batched projection of array reads: a
+            # Filter on a key (drop_event) stays above the Generate, so
+            # the plan evaluates the pattern once per row; a per-key
+            # put_field chain cannot re-inline quadratically; and an
+            # in-place overwrite of the source field (target_prefix "")
+            # cannot poison later keys or the failure flag (same fix as
+            # Grok / put_fields)
+            df = materialize(df, {"__dissect_arr__": self.tok.capture_array(src)})
             matched, values = self.tok.native_values(
                 F.col("__dissect_arr__"), convert, self.tok.trimmer
             )

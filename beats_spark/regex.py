@@ -77,14 +77,14 @@ def single_pass_ok(regex: str) -> bool:
     return not _UNSAFE_FLAGS.search(regex) and regex.rfind("\\Q") <= regex.rfind("\\E")
 
 
-def capture_array(
-    src: Column, regex: str, n: int, *, empty_as_null: bool, single_pass: bool = True
-) -> Column:
+def capture_array(src: Column, regex: str, n: int, *, single_pass: bool = True) -> Column:
     """The `n` capture groups of `regex`'s first match in `src`, built
     in ONE regex evaluation: array [prefix, g1, …, gn] on a match, a
     shorter array (or NULL) otherwise — test with `capture_matched`,
     read with `capture`. Non-participating and empty groups are ""
-    (what `regexp_extract` returns), or NULL with `empty_as_null`.
+    (what `regexp_extract` returns); a reader that wants NULL wraps its
+    `capture` in `nullif` (no `transform` here: a higher-order function
+    takes its whole operator out of whole-stage codegen).
 
     `regexp_replace(src, (?:regex)(?s:.*), SEP$1SEP$2…SEP$n)` rewrites
     the first match and, through the match-anything tail, the rest of
@@ -96,18 +96,15 @@ def capture_array(
     the per-capture `rlike` + `regexp_extract` path instead; it sits
     behind the SEP guard, so the common path never evaluates it.
 
-    Materialize the result as a column before reading it more than once:
-    a pushed-down Filter copies every reference to it."""
+    Materialize the result with `fields.materialize` before reading it
+    more than once: a pushed-down Filter or a collapsed projection
+    copies every reference to an unmaterialized one."""
     groups = [F.regexp_extract(src, regex, i) for i in range(1, n + 1)]
-    if empty_as_null:
-        groups = [F.nullif(g, F.lit("")) for g in groups]
     exact = F.when(src.rlike(regex), F.array(F.lit(""), *groups))
     if n == 0 or not single_pass or not single_pass_ok(regex):
         return exact
     rep = "".join(f"{SEP}${i}" for i in range(1, n + 1))
     arr = F.split(F.regexp_replace(src, f"(?:{regex})(?s:.*)", rep), SEP)
-    if empty_as_null:
-        arr = F.transform(arr, lambda x: F.nullif(x, F.lit("")))
     return F.when(F.instr(src, SEP) == 0, arr).otherwise(exact)
 
 

@@ -8,8 +8,9 @@ agree with the per-capture path (both on the JVM, any text) and with
 Python `re` on the compiled regex (ASCII text, where Java's and
 Python's classes coincide); native dissect must agree with the Python
 port of the Go algorithm (`Tokenizer.dissect`). Plan-shape tests pin
-that a processor chain evaluates each pattern at most once per
-operator on the common path."""
+that a processor chain evaluates each pattern once in its whole plan,
+in a compiled Generate (`fields.materialize`), and that filters on
+input columns still run below it."""
 
 from __future__ import annotations
 
@@ -20,12 +21,15 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from beats_spark.checkpoint import CHUNK_COL, with_chunk
 from beats_spark.datagen import token_events_sql
 from beats_spark.dissect import Tokenizer, make_trimmer
+from beats_spark.fields import materialize
 from beats_spark.flagship import flagship_config
 from beats_spark.grok import compile_grok, grok_columns, grok_values
 from beats_spark.pipeline import Pipeline
 from beats_spark.processors import compile_one
+from beats_spark.readers.lines import include_message
 from beats_spark.regex import SEP, capture_array, single_pass_ok
 from tests.test_dissect_properties import tokenizers
 
@@ -164,7 +168,7 @@ def _grok_rows(spark, pattern: str, lines: list) -> tuple[list, list]:
     s = F.col("s")
     fast = grok_columns(s, pattern)
     exact = grok_values(
-        capture_array(s, regex, len(caps), empty_as_null=True, single_pass=False), caps
+        capture_array(s, regex, len(caps), single_pass=False), caps
     )
     cols = []
     for tag, (matched, values) in (("f", fast), ("x", exact)):
@@ -292,7 +296,7 @@ def _native_rows(spark, tok: Tokenizer, lines: list, single_pass: bool = True) -
         matched, values = tok.native_exprs(s, convert=False)
     else:
         n = len(tok.fields)
-        arr = capture_array(s, tok.regex(), n, empty_as_null=False, single_pass=False)
+        arr = capture_array(s, tok.regex(), n, single_pass=False)
         matched, values = tok.native_values(F.when(F.length(s) > 0, arr), convert=False)
     rows = (
         spark.createDataFrame([(v,) for v in lines], "s string")
@@ -371,22 +375,46 @@ def _children(node) -> list:
 
 
 def _operators(df) -> list:
-    """(kind, expressions) of every Filter and Project of the executed
-    plan (the final adaptive plan once the frame has run)."""
+    """(kind, expressions, compiled, above) of every Filter, Project and
+    Generate of the executed plan (the final adaptive plan once the
+    frame has run): `compiled` when the operator sits in a whole-stage
+    codegen span, `above` the kinds of such operators above it."""
     plan = df._jdf.queryExecution().executedPlan()
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         plan = plan.executedPlan()
-    ops, stack = [], [plan]
+    ops, stack = [], [(plan, False, ())]
     while stack:
-        node = stack.pop()
+        node, compiled, above = stack.pop()
         kind = node.getClass().getSimpleName()
+        if kind == "WholeStageCodegenExec":
+            compiled = True
+        elif kind == "InputAdapter":
+            compiled = False
+        exprs = None
         if kind == "FilterExec":
-            ops.append(("Filter", [node.condition()]))
+            exprs = [node.condition()]
         elif kind == "ProjectExec":
             pl = node.projectList()
-            ops.append(("Project", [pl.apply(i) for i in range(pl.size())]))
-        stack.extend(_children(node))
+            exprs = [pl.apply(i) for i in range(pl.size())]
+        elif kind == "GenerateExec":
+            exprs = [node.generator()]
+        if exprs is not None:
+            ops.append((kind[: -len("Exec")], exprs, compiled, above))
+            above = (*above, kind[: -len("Exec")])
+        stack.extend((c, compiled, above) for c in _children(node))
     return ops
+
+
+def _holds(exprs: list, kind: str, text: str = "") -> bool:
+    """Whether some node of class `kind` whose text holds `text` is in
+    the expression trees."""
+    stack = list(exprs)
+    while stack:
+        e = stack.pop()
+        if e.getClass().getSimpleName() == kind and text in e.toString():
+            return True
+        stack += _children(e)
+    return False
 
 
 def _regex_uses(exprs: list, regex: str) -> tuple[int, int]:
@@ -412,34 +440,109 @@ def _regex_uses(exprs: list, regex: str) -> tuple[int, int]:
 
 
 @pytest.fixture(scope="module")
-def token_events(spark):
+def token_events(spark, tmp_path_factory):
+    """The token table read from parquet, as the benchmark reads it: the
+    generator's own `transform` stays out of the plans under test."""
     spark.range(1, 201).withColumnRenamed("id", "o_orderkey").createOrReplaceTempView(
         "match_once_keys"
     )
-    return spark.sql(token_events_sql("spark", "match_once_keys"))
+    path = str(tmp_path_factory.mktemp("match_once") / "events")
+    spark.sql(token_events_sql("spark", "match_once_keys")).write.parquet(path)
+    return spark.read.parquet(path)
 
 
-def _assert_one_pass_per_operator(df, regex: str) -> None:
+def _assert_matches_once(df, *regexes: str) -> None:
+    """Each regex is evaluated once in the whole executed plan: one
+    single-pass rewrite, in a Generate inside a whole-stage codegen
+    span, the same Generate for all of them; no Filter or Project holds
+    a pass, and every per-capture node sits behind the separator guard."""
     df.collect()
-    uses = [(kind, *_regex_uses(exprs, regex)) for kind, exprs in _operators(df)]
-    assert all(p <= 1 and u == 0 for _, p, u in uses), uses
-    # the Filter Catalyst pushed below the parse copies the pass once,
-    # and one Project builds the column every field reads
-    assert sum(p for k, p, _ in uses if k == "Filter") == 1, uses
-    assert sum(p for k, p, _ in uses if k == "Project") == 1, uses
+    ops = _operators(df)
+    where = set()
+    for regex in regexes:
+        uses = [(i, kind, compiled, *_regex_uses(exprs, regex))
+                for i, (kind, exprs, compiled, _) in enumerate(ops)]
+        assert all(u == 0 for *_, u in uses), uses
+        passes = {(i, kind, compiled): p for i, kind, compiled, p, _ in uses if p}
+        assert list(passes.values()) == [1], uses
+        [(i, kind, compiled)] = passes
+        assert (kind, compiled) == ("Generate", True), uses
+        where.add(i)
+    assert len(where) == 1, where
 
 
-def test_plan_grok_then_drop_event_matches_once(token_events):
-    chain = {
+def _grok_chain(*patterns: str) -> dict:
+    return {
         "processors": [
-            {"grok": {"field": "payload", "pattern": KV, "target_prefix": ""}},
+            {"grok": {"field": "payload", "patterns": list(patterns), "target_prefix": ""}},
             {"drop_event": {"when": {"equals": {"level": "debug"}}}},
         ]
     }
-    _assert_one_pass_per_operator(Pipeline(chain).transform(token_events), _anchored(KV)[0])
+
+
+def test_plan_grok_then_drop_event_matches_once(token_events):
+    """One pattern, and a two-pattern chain whose arrays share one Generate."""
+    for patterns in ([KV], [KV, ALT]):
+        out = Pipeline(_grok_chain(*patterns)).transform(token_events)
+        _assert_matches_once(out, *[_anchored(p)[0] for p in patterns])
+        # a higher-order function would take its operator out of codegen
+        assert not any(_holds(exprs, "ArrayTransform") for _, exprs, _, _ in _operators(out))
 
 
 def test_plan_flagship_dissect_matches_once(token_events):
     cfg = flagship_config()
     tok = Tokenizer(cfg["processors"][0]["dissect"]["tokenizer"])
-    _assert_one_pass_per_operator(Pipeline(cfg).transform(token_events), tok.regex())
+    _assert_matches_once(Pipeline(cfg).transform(token_events), tok.regex())
+
+
+_INCLUDE = "^level=(info|warn)"
+
+
+@pytest.mark.parametrize("order", ["before", "after"])
+@pytest.mark.parametrize(
+    "kind, text, keep",
+    [
+        ("RLike", _INCLUDE, lambda df: include_message(df, [_INCLUDE], line_col="payload")),
+        ("XxHash64", "", lambda df: df.filter(F.col(CHUNK_COL) == 3)),
+    ],
+    ids=["include_lines", "chunk"],
+)
+def test_plan_input_filters_run_below_the_parse(token_events, order, kind, text, keep):
+    """Filters on input columns sit below the Generate that parses,
+    whether applied before or after the chain: include_lines' rlike on
+    the payload, and a checkpoint chunk's pmod(xxhash64(doc_id)) filter,
+    so a chunk job parses only its own rows."""
+    pipe = Pipeline(flagship_config())
+    df = with_chunk(token_events, 8)
+    out = pipe.transform(keep(df)) if order == "before" else keep(pipe.transform(df))
+    out.collect()
+    ops = _operators(out)
+    assert any(k == "Generate" for k, *_ in ops), ops
+    filters = [above for k, exprs, _, above in ops if k == "Filter" and _holds(exprs, kind, text)]
+    assert filters and all("Generate" in above for above in filters), filters
+
+
+_EDGE_LINES = [
+    None,
+    "",
+    'level=info ts=2026-01-02T12:00:00Z caller=a.go:1 msg="hi" ip=10.0.0.1 seq=5',
+    'level=info ts=2026-01-02T12:00:00Z caller=a.go:1 msg="h' + SEP + 'i" ip=10.0.0.1 seq=5',
+    "no match here",
+]
+
+
+def test_materialize_keeps_one_unchanged_row_per_input_row(spark):
+    """The Generate emits exactly one row per input row, with the input
+    columns unchanged and the new columns as a projection computes them:
+    a NULL payload, "", a payload holding the separator, a non-match."""
+    tok = Tokenizer(flagship_config()["processors"][0]["dissect"]["tokenizer"])
+    regex, caps = _anchored(KV)
+    df = spark.createDataFrame(list(enumerate(_EDGE_LINES)), "id int, payload string")
+    s = F.col("payload")
+    cols = {"g": capture_array(s, regex, len(caps)), "d": tok.capture_array(s)}
+    got = materialize(df, cols)
+    want = df.withColumns(cols)
+    assert got.columns == want.columns
+    rows = got.orderBy("id").collect()
+    assert rows == want.orderBy("id").collect()
+    assert [(r["id"], r["payload"]) for r in rows] == list(enumerate(_EDGE_LINES))
