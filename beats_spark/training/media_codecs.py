@@ -17,6 +17,18 @@ h264-class compressed video) still require a registered kernel
 (`multimodal.register_decoder`); the deterministic byte-hash stubs
 remain only as the fallback for those.
 
+Each format is declared once, in the FORMATS table at the end of
+this module: magic bytes, RIFF form, kind, header probe and kernels
+(features, resize, frame sampler). Sniffing, the multimodal kernel
+dispatch and probe_header all read that table, so adding a format is
+one entry. Each container's header has one parse (_wav_header,
+_avi_header, _flac_streaminfo) that its decoder runs first and its
+probe runs alone, so a payload the decoder accepts is one the probe
+accepts. WAV, WebP and AVI walk chunks with one RIFF walker
+(_riff_chunks); JPEG and FLAC share one MSB bit reader and one writer
+(_MsbReader, _MsbWriter); every still-raster resize is one function
+over the format's (decode, encode) pair (_recode).
+
 Feature vectors are integer-derived (ppm quantization, the q19/q27
 recipe) so a DuckDB oracle can recompute them exactly from the
 payload-planting arithmetic without decoding anything.
@@ -28,6 +40,11 @@ repo adds per the build brief).
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from functools import partial
+from itertools import accumulate
+from typing import Callable
 
 import numpy as np
 
@@ -53,6 +70,125 @@ def _check_decode_dims(fmt: str, w: int, h: int) -> None:
         raise MediaDecodeError(
             f"{fmt}: refusing {w}x{h} (decoder pixel cap {MAX_DECODE_PIXELS})"
         )
+
+
+# --- shared primitives: MSB bit I/O, the RIFF chunk walker ------------------
+
+
+class _MsbReader:
+    """MSB-first bit reader (JPEG entropy segments, FLAC frames; VP8L's
+    _LsbReader is the little-endian twin). The low `n` bits of `acc`
+    are fetched but unread (higher bits are stale): `bit()` is the
+    one-bit fast path of the Huffman walk, `read(k)` refills whole
+    bytes at once."""
+
+    __slots__ = ("data", "fmt", "pos", "acc", "n")
+
+    def __init__(self, data: bytes, fmt: str, bitpos: int = 0) -> None:
+        self.data = data
+        self.fmt = fmt
+        self.pos = bitpos >> 3
+        self.acc = 0
+        self.n = 0
+        if bitpos & 7:
+            self.read(bitpos & 7)
+
+    @property
+    def bitpos(self) -> int:
+        return 8 * self.pos - self.n
+
+    def _truncated(self) -> MediaDecodeError:
+        return MediaDecodeError(f"{self.fmt}: truncated bitstream")
+
+    def bit(self) -> int:
+        if not self.n:
+            if self.pos >= len(self.data):
+                raise self._truncated()
+            self.acc = self.data[self.pos]
+            self.pos += 1
+            self.n = 8
+        self.n -= 1
+        return (self.acc >> self.n) & 1
+
+    def read(self, k: int) -> int:
+        n = self.n
+        if n < k:
+            end = self.pos + ((k - n + 7) >> 3)
+            if end > len(self.data):
+                raise self._truncated()
+            fresh = int.from_bytes(self.data[self.pos : end], "big")
+            self.acc = ((self.acc & ((1 << n) - 1)) << (8 * (end - self.pos))) | fresh
+            n += 8 * (end - self.pos)
+            self.pos = end
+        self.n = n = n - k
+        return (self.acc >> n) & ((1 << k) - 1)
+
+    def read_signed(self, k: int) -> int:
+        v = self.read(k)
+        return v - (1 << k) if v & (1 << (k - 1)) else v
+
+    def read_unary(self) -> int:
+        """Count the 0-bits before the next 1-bit; consumes both."""
+        q = 0
+        n = self.n
+        cur = self.acc & ((1 << n) - 1)
+        while not cur:
+            if self.pos >= len(self.data):
+                raise self._truncated()
+            q += n
+            cur = self.acc = self.data[self.pos]
+            self.pos += 1
+            n = 8
+        zeros = n - cur.bit_length()
+        self.n = n - zeros - 1
+        return q + zeros
+
+
+class _MsbWriter:
+    """MSB-first bit writer (FLAC frames, JPEG entropy segments; VP8L's
+    _LsbWriter is the little-endian twin). It does not byte-stuff:
+    JPEG stuffs each finished segment (_jpeg_stuff)."""
+
+    __slots__ = ("buf", "acc", "n")
+
+    def __init__(self) -> None:
+        self.buf = bytearray()
+        self.acc = 0
+        self.n = 0
+
+    def write(self, v: int, bits: int) -> None:
+        self.acc = (self.acc << bits) | (v & ((1 << bits) - 1))
+        self.n += bits
+        while self.n >= 8:
+            self.n -= 8
+            self.buf.append((self.acc >> self.n) & 0xFF)
+        self.acc &= (1 << self.n) - 1
+
+    def write_unary(self, q: int) -> None:
+        self.write(1, q + 1)  # q zero bits then a terminating 1
+
+    def align(self, pad: int = 0) -> None:
+        """Fill to a byte boundary with `pad` bits (FLAC 0s, JPEG 1s)."""
+        if self.n:
+            k = 8 - self.n
+            self.write((1 << k) - 1 if pad else 0, k)
+
+
+def _riff_chunks(buf: bytes, lo: int, hi: int, fmt: str, clip: bool = False):
+    """Yield (fourcc, body_lo, body_hi) for each chunk of the RIFF run
+    buf[lo:hi] — the one chunk walker of WAV, WebP and AVI. Bodies are
+    word-aligned. A chunk running past `hi` raises, or with `clip`
+    (streamed WAVs) is cut to the bytes that are there."""
+    pos = lo
+    while pos + 8 <= hi:
+        size = int.from_bytes(buf[pos + 4 : pos + 8], "little")
+        end = pos + 8 + size
+        if end > hi:
+            if not clip:
+                raise MediaDecodeError(f"{fmt}: truncated chunk")
+            end = hi
+        yield buf[pos : pos + 4], pos + 8, end
+        pos += 8 + size + (size & 1)
 
 
 # --- PPM (P6) ----------------------------------------------------------------
@@ -155,55 +291,72 @@ def bilinear_resize(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return np.clip(np.floor(out + 0.5), 0, 255).astype(np.uint8)
 
 
-def ppm_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Decode-P6 → bilinear → re-encode-P6: the real image resizer."""
-    return encode_ppm(bilinear_resize(decode_ppm(payload), w, h))
+def _recode(decode, encode, payload: bytes, w: int, h: int) -> bytes:
+    """The resize of a still-raster format, over its (decode, encode)
+    pair: decode → bilinear_resize (alpha included) → re-encode."""
+    return encode(bilinear_resize(decode(payload), w, h))
 
 
 # --- WAV (PCM16) --------------------------------------------------------------
 
 
-def decode_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """RIFF/WAVE with PCM16 (fmt 0x01) or IMA ADPCM (fmt 0x11) data →
-    (sample_rate, channels, int16 samples, interleaved). Walks the
-    chunk list (fmt may not be the first chunk — LIST/INFO prefixes
-    are common); a fact chunk bounds the ADPCM frame count (the final
-    block is pad-extended on encode)."""
+def _wav_header(payload: bytes):
+    """The one parse of a WAVE's fmt/fact/data chunks — decode_wav runs
+    it first, the header probe runs it alone. Chunks come in any order
+    (LIST/INFO prefixes are common); a data chunk running past the
+    payload is cut to the bytes there (streamed WAVs). PCM and G.711
+    need nBlockAlign = channels × bytes per sample; IMA ADPCM needs
+    samples_per_block to match block_align. Returns (fmt_tag,
+    channels, rate, block_align, bits, samples_per_block | None,
+    fact frames | None, data_lo, data_hi)."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise MediaDecodeError("wav: not a RIFF/WAVE payload")
-    pos, ln = 12, len(payload)
-    rate = channels = bits = fmt_tag = None
-    block_align = spb = fact_frames = None
-    data: bytes | None = None
-    while pos + 8 <= ln:
-        cid = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
+    fmt = fact = data = None
+    for cid, lo, hi in _riff_chunks(payload, 12, len(payload), "wav", clip=True):
         if cid == b"fmt ":
-            if len(body) < 16:
+            if hi - lo < 16:
                 raise MediaDecodeError("wav: short fmt chunk")
-            fmt_tag = int.from_bytes(body[0:2], "little")
-            channels = int.from_bytes(body[2:4], "little")
-            rate = int.from_bytes(body[4:8], "little")
-            block_align = int.from_bytes(body[12:14], "little")
-            bits = int.from_bytes(body[14:16], "little")
-            if len(body) >= 20:
-                spb = int.from_bytes(body[18:20], "little")
-        elif cid == b"fact" and size >= 4:
-            fact_frames = int.from_bytes(body[0:4], "little")
+            fmt = payload[lo:hi]
+        elif cid == b"fact" and hi - lo >= 4:
+            fact = int.from_bytes(payload[lo : lo + 4], "little")
         elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if rate is None or data is None:
+            data = (lo, hi)
+    if fmt is None or data is None:
         raise MediaDecodeError("wav: missing fmt or data chunk")
-    channels = channels or 1
+    tag = int.from_bytes(fmt[0:2], "little")
+    channels = int.from_bytes(fmt[2:4], "little") or 1
+    rate = int.from_bytes(fmt[4:8], "little")
+    block = int.from_bytes(fmt[12:14], "little")
+    bits = int.from_bytes(fmt[14:16], "little")
+    spb = int.from_bytes(fmt[18:20], "little") if len(fmt) >= 20 else None
+    if not rate:
+        raise MediaDecodeError("wav: zero sample rate")
+    if tag in (0x01, 0x06, 0x07) and block != channels * ((bits + 7) // 8):
+        raise MediaDecodeError(
+            f"wav: block_align {block} != {channels} channels x {bits} bits"
+        )
+    if tag == 0x11:
+        if spb is None:
+            raise MediaDecodeError("wav: ADPCM fmt missing samples_per_block")
+        if spb != ima_adpcm_samples_per_block(block, channels):
+            raise MediaDecodeError("wav: ADPCM samples_per_block inconsistent with block_align")
+    if not block:
+        raise MediaDecodeError("wav: zero block_align")
+    return (tag, channels, rate, block, bits, spb, fact) + data
+
+
+def decode_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
+    """RIFF/WAVE with PCM16 (fmt 0x01), G.711 (0x06/0x07) or IMA ADPCM
+    (0x11) data → (sample_rate, channels, int16 samples, interleaved).
+    A fact chunk bounds the ADPCM and G.711 frame count (the final
+    ADPCM block is pad-extended on encode)."""
+    fmt_tag, channels, rate, block_align, bits, spb, fact_frames, lo, hi = (
+        _wav_header(payload)
+    )
+    data = payload[lo:hi]
     if fmt_tag == 0x11:
         if bits != 4:
             raise MediaDecodeError(f"wav: IMA ADPCM needs 4-bit nibbles, got {bits}")
-        if not block_align or spb is None:
-            raise MediaDecodeError("wav: ADPCM fmt missing block_align/samples_per_block")
-        if spb != ima_adpcm_samples_per_block(block_align, channels):
-            raise MediaDecodeError("wav: ADPCM samples_per_block inconsistent with block_align")
         samples = _decode_ima_adpcm(
             rate, channels, block_align, spb, data, fact_frames
         )
@@ -258,6 +411,28 @@ def wav_features(payload: bytes) -> list[float]:
 # --- BMP (24-bit BI_RGB) -------------------------------------------------------
 
 
+def _dib_pack(img: np.ndarray) -> bytes:
+    """(h, w, 3) RGB → bottom-up 4-byte-padded BGR rows (the shared
+    BMP/AVI 24-bit BI_RGB raster)."""
+    h, w = img.shape[0], img.shape[1]
+    stride = ((w * 3 + 3) // 4) * 4
+    bgr = img[..., ::-1].astype(np.uint8)
+    pad = b"\x00" * (stride - w * 3)
+    return b"".join(r.tobytes() + pad for r in bgr[::-1])
+
+
+def _dib_unpack(data: bytes, w: int, h: int, top_down: bool, fmt: str) -> np.ndarray:
+    """_dib_pack's inverse; rows are top-down when `top_down`."""
+    stride = ((w * 3 + 3) // 4) * 4
+    if len(data) < stride * h:
+        raise MediaDecodeError(f"{fmt}: truncated pixel data")
+    rows = np.frombuffer(data, np.uint8, count=stride * h).reshape(h, stride)
+    img = rows[:, : w * 3].reshape(h, w, 3)
+    if not top_down:
+        img = img[::-1]
+    return img[:, :, ::-1].copy()  # BGR → RGB
+
+
 def decode_bmp(payload: bytes) -> np.ndarray:
     """'BM' + BITMAPINFOHEADER, bpp=24, compression BI_RGB → uint8
     (h, w, 3) RGB. On-disk rows are 4-byte padded BGR, bottom-up when
@@ -278,18 +453,7 @@ def decode_bmp(payload: bytes) -> np.ndarray:
         raise MediaDecodeError(f"bmp: only 24-bit BI_RGB supported (bpp={bpp}, compression={comp})")
     if w <= 0 or h == 0:
         raise MediaDecodeError("bmp: bad dimensions")
-    top_down = h < 0
-    ah = abs(h)
-    stride = ((w * 3 + 3) // 4) * 4
-    if len(payload) < off + stride * ah:
-        raise MediaDecodeError("bmp: truncated pixel data")
-    rows = np.frombuffer(
-        payload, dtype=np.uint8, count=stride * ah, offset=off
-    ).reshape(ah, stride)
-    img = rows[:, : w * 3].reshape(ah, w, 3)
-    if not top_down:
-        img = img[::-1]
-    return img[..., ::-1].copy()  # BGR → RGB
+    return _dib_unpack(payload[off:], w, abs(h), h < 0, "bmp")
 
 
 def encode_bmp(img: np.ndarray) -> bytes:
@@ -313,19 +477,11 @@ def encode_bmp(img: np.ndarray) -> bytes:
         + (2835).to_bytes(4, "little") * 2
         + (0).to_bytes(4, "little") * 2
     )
-    bgr = img[..., ::-1].astype(np.uint8)
-    pad = b"\x00" * (stride - w * 3)
-    body = b"".join(r.tobytes() + pad for r in bgr[::-1])
-    return hdr + body
+    return hdr + _dib_pack(img)
 
 
 def bmp_features(payload: bytes) -> list[float]:
     return _rgb_features(decode_bmp(payload))
-
-
-def bmp_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Decode-BMP → bilinear → re-encode-BMP."""
-    return encode_bmp(bilinear_resize(decode_bmp(payload), w, h))
 
 
 # --- PNG (8-bit RGB / RGBA, non-interlaced) -----------------------------------
@@ -433,6 +589,8 @@ def decode_png(payload: bytes) -> np.ndarray:
     trns = None
     idat = []
     for ctype, data in _png_chunks(payload):
+        if (ctype == b"IHDR") != (ihdr is None):  # spec; the probe reads byte 12
+            raise MediaDecodeError("png: IHDR must be the first chunk, once")
         if ctype == b"IHDR":
             ihdr = data
         elif ctype == b"PLTE":
@@ -540,11 +698,6 @@ def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
 
 def png_features(payload: bytes) -> list[float]:
     return _rgb_features(decode_png(payload))
-
-
-def png_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Decode-PNG → bilinear (all channels incl. alpha) → re-encode."""
-    return encode_png(bilinear_resize(decode_png(payload), w, h))
 
 
 # --- JPEG (baseline DCT, ITU-T T.81) ------------------------------------------
@@ -698,34 +851,6 @@ def _huff_encode_table(bits: list[int], vals: list[int]) -> dict[int, tuple[int,
     return {v: (ln, c) for (ln, c), v in _huff_decode_table(bits, vals).items()}
 
 
-class _BitReader:
-    """MSB-first bit reader over a de-stuffed entropy segment."""
-
-    __slots__ = ("data", "pos", "acc", "n")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            if self.pos >= len(self.data):
-                raise MediaDecodeError("jpeg: entropy data exhausted mid-block")
-            self.acc = self.data[self.pos]
-            self.pos += 1
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def receive(self, s: int) -> int:
-        v = 0
-        for _ in range(s):
-            v = (v << 1) | self.bit()
-        return v
-
-
 def _extend(v: int, s: int) -> int:
     """F.12 EXTEND: map the s-bit magnitude field to a signed value."""
     return v if s == 0 or v >= (1 << (s - 1)) else v - (1 << s) + 1
@@ -831,7 +956,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 bits = list(body[i + 1 : i + 17])
                 nval = sum(bits)
                 vals = list(body[i + 17 : i + 17 + nval])
-                if len(vals) != nval:
+                if len(bits) != 16 or len(vals) != nval:
                     raise MediaDecodeError("jpeg: truncated DHT")
                 (dc_tabs if tc == 0 else ac_tabs)[th] = _huff_decode_table(bits, vals)
                 i += 17 + nval
@@ -890,7 +1015,7 @@ def _decode_scan(payload, pos, sof, scan, qts, dc_tabs, ac_tabs, restart):
         )
     mcu = 0
     for seg in segs:
-        rd = _BitReader(seg)
+        rd = _MsbReader(seg, "jpeg")
         preds = [0] * len(comps)
         for _ in range(min(per_seg, n_mcu - mcu)):
             my, mx = divmod(mcu, mcux)
@@ -905,7 +1030,7 @@ def _decode_scan(payload, pos, sof, scan, qts, dc_tabs, ac_tabs, restart):
                     for bx in range(hs):
                         zz = np.zeros(64, dtype=np.float64)
                         s = _huff_lookup(rd, dct)
-                        zz[0] = preds[ci] = preds[ci] + _extend(rd.receive(s), s)
+                        zz[0] = preds[ci] = preds[ci] + _extend(rd.read(s), s)
                         k = 1
                         while k < 64:
                             rs = _huff_lookup(rd, act)
@@ -918,7 +1043,7 @@ def _decode_scan(payload, pos, sof, scan, qts, dc_tabs, ac_tabs, restart):
                             k += r
                             if k > 63:
                                 raise MediaDecodeError("jpeg: AC run past block end")
-                            zz[k] = _extend(rd.receive(size), size)
+                            zz[k] = _extend(rd.read(size), size)
                             k += 1
                         coef = np.zeros(64, dtype=np.float64)
                         coef[nat] = zz * qt
@@ -949,7 +1074,7 @@ def _decode_scan(payload, pos, sof, scan, qts, dc_tabs, ac_tabs, restart):
     return np.clip(np.floor(rgb + 0.5), 0, 255).astype(np.uint8)
 
 
-def _huff_lookup(rd: _BitReader, lut: dict) -> int:
+def _huff_lookup(rd: _MsbReader, lut: dict) -> int:
     code = 0
     for ln in range(1, 17):
         code = (code << 1) | rd.bit()
@@ -959,30 +1084,10 @@ def _huff_lookup(rd: _BitReader, lut: dict) -> int:
     raise MediaDecodeError("jpeg: invalid Huffman code")
 
 
-class _BitWriter:
-    """MSB-first bit writer with FF byte stuffing and 1-padding."""
-
-    __slots__ = ("out", "acc", "n")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, code: int, ln: int) -> None:
-        for i in range(ln - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)
-                self.acc = 0
-                self.n = 0
-
-    def flush(self) -> None:
-        if self.n:
-            self.put((1 << (8 - self.n)) - 1, 8 - self.n)
+def _jpeg_stuff(seg: bytes) -> bytes:
+    """Byte-stuff a finished, 1-padded entropy segment (FF → FF 00,
+    T.81 F.1.2.3): the inverse of _split_entropy's de-stuffing."""
+    return bytes(seg).replace(b"\xff", b"\xff\x00")
 
 
 def _magnitude(v: int) -> tuple[int, int]:
@@ -1079,9 +1184,9 @@ def encode_jpeg(
         if s not in dct:
             raise MediaDecodeError(f"jpeg: DC magnitude {s} exceeds table")
         ln, code = dct[s]
-        wr.put(code, ln)
+        wr.write(code, ln)
         if s:
-            wr.put(bitsv, s)
+            wr.write(bitsv, s)
         run = 0
         for k in range(1, 64):
             v = int(q[k])
@@ -1090,32 +1195,32 @@ def encode_jpeg(
                 continue
             while run > 15:
                 ln, code = act[0xF0]  # ZRL
-                wr.put(code, ln)
+                wr.write(code, ln)
                 run -= 16
             s, bitsv = _magnitude(v)
             if (run << 4) | s not in act:
                 raise MediaDecodeError(f"jpeg: AC magnitude {s} exceeds table")
             ln, code = act[(run << 4) | s]
-            wr.put(code, ln)
-            wr.put(bitsv, s)
+            wr.write(code, ln)
+            wr.write(bitsv, s)
             run = 0
         if run:
             ln, code = act[0x00]  # EOB
-            wr.put(code, ln)
+            wr.write(code, ln)
         return int(q[0])
 
     qzzs = [qt[nat].astype(np.float64) for qt in qt_nat]  # natural → zigzag
     ncomp = len(planes)
     entropy = bytearray()
-    wr = _BitWriter()
+    wr = _MsbWriter()
     preds = [0] * ncomp
     n_mcu = mcux * mcuy
     for mcu in range(n_mcu):
         if restart_interval and mcu and mcu % restart_interval == 0:
-            wr.flush()
-            entropy += wr.out
+            wr.align(1)
+            entropy += _jpeg_stuff(wr.buf)
             entropy += bytes([0xFF, 0xD0 + ((mcu // restart_interval - 1) % 8)])
-            wr = _BitWriter()
+            wr = _MsbWriter()
             preds = [0] * ncomp
         my, mx = divmod(mcu, mcux)
         for ci in range(ncomp):
@@ -1133,8 +1238,8 @@ def encode_jpeg(
                         ac_enc[t],
                         preds[ci],
                     )
-    wr.flush()
-    entropy += wr.out
+    wr.align(1)
+    entropy += _jpeg_stuff(wr.buf)
 
     def seg(marker: int, body: bytes) -> bytes:
         return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
@@ -1168,11 +1273,6 @@ def encode_jpeg(
 
 def jpeg_features(payload: bytes) -> list[float]:
     return _rgb_features(decode_jpeg(payload))
-
-
-def jpeg_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Decode-JPEG → bilinear → re-encode (Annex K tables, 4:4:4)."""
-    return encode_jpeg(bilinear_resize(decode_jpeg(payload), w, h))
 
 
 # --- GIF (87a/89a, LZW) -------------------------------------------------------
@@ -1615,6 +1715,13 @@ def gif_features(payload: bytes) -> list[float]:
     return _rgb_features(decode_gif(payload))
 
 
+def _pick_frames(frames: list, starts_ms: list[int], n_frames: int) -> list:
+    """Sample j of n is frame (j·F)//n at its start time, re-encoded as
+    PPM (alpha dropped — PPM is the pixel-exact interchange)."""
+    picks = [(j, (j * len(frames)) // n_frames) for j in range(n_frames)]
+    return [(j, starts_ms[fi], encode_ppm(frames[fi][..., :3])) for j, fi in picks]
+
+
 def gif_frame_sample(payload: bytes, n_frames: int) -> list[tuple[int, int, bytes]]:
     """REAL frame sampling for animated GIFs (the sample_frames
     kernel): decode + composite all frames, pick index (j·F)//n for
@@ -1623,15 +1730,7 @@ def gif_frame_sample(payload: bytes, n_frames: int) -> list[tuple[int, int, byte
     timeline, re-encode each sampled frame as PPM — so downstream
     extract_features runs the real PPM kernel on real pixels."""
     frames, delays = decode_gif_frames(payload)
-    nf = len(frames)
-    starts = [0] * nf
-    for k in range(1, nf):
-        starts[k] = starts[k - 1] + delays[k - 1]
-    out = []
-    for j in range(n_frames):
-        fi = (j * nf) // n_frames
-        out.append((j, starts[fi], encode_ppm(frames[fi])))
-    return out
+    return _pick_frames(frames, [0, *accumulate(delays[:-1])], n_frames)
 
 
 def gif_resize(payload: bytes, w: int, h: int) -> bytes:
@@ -2078,18 +2177,10 @@ def _vp8l_apply_inverse(kind: int, data, pixels: list[int], w: int, h: int):
     raise MediaDecodeError(f"webp: bad transform {kind}")
 
 
-def _webp_chunks(payload: bytes, start: int = 12, end: int | None = None):
-    """Yield (tag, body) over a RIFF chunk run; word-aligned sizes."""
-    pos = start
-    stop = len(payload) if end is None else end
-    while pos + 8 <= stop:
-        tag = payload[pos + 0 : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) < size:
-            raise MediaDecodeError("webp: truncated chunk")
-        yield tag, body
-        pos += 8 + size + (size & 1)
+def _webp_chunks(buf: bytes, start: int = 12):
+    """Yield (tag, body) over the RIFF chunks of buf[start:]."""
+    for tag, lo, hi in _riff_chunks(buf, start, len(buf), "webp"):
+        yield tag, buf[lo:hi]
 
 
 def _decode_vp8l_payload(vp8l: bytes) -> np.ndarray:
@@ -2239,7 +2330,7 @@ def decode_webp_frames(payload: bytes) -> tuple[list[np.ndarray], list[int]]:
             dur = int.from_bytes(body[12:15], "little")
             fflags = body[15]
             sub = None
-            for stag, sbody in _webp_chunks(body, start=16, end=len(body)):
+            for stag, sbody in _webp_chunks(body, start=16):
                 if stag == b"VP8L":
                     sub = _decode_vp8l_payload(sbody)
                     break
@@ -2355,15 +2446,7 @@ def webp_frame_sample(payload: bytes, n_frames: int) -> list[tuple[int, int, byt
     duration timeline, re-encode each sampled frame as PPM (alpha
     dropped — PPM is the pixel-exact downstream interchange)."""
     frames, durations = decode_webp_frames(payload)
-    nf = len(frames)
-    starts = [0] * nf
-    for k in range(1, nf):
-        starts[k] = starts[k - 1] + durations[k - 1]
-    out = []
-    for j in range(n_frames):
-        fi = (j * nf) // n_frames
-        out.append((j, starts[fi], encode_ppm(frames[fi][..., :3])))
-    return out
+    return _pick_frames(frames, [0, *accumulate(durations[:-1])], n_frames)
 
 
 def _package_merge(freqs: dict[int, int], limit: int) -> dict[int, int]:
@@ -2784,11 +2867,6 @@ def webp_features(payload: bytes) -> list[float]:
     return _rgb_features(decode_webp(payload))
 
 
-def webp_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Decode-WebP → bilinear (all channels incl. alpha) → re-encode."""
-    return encode_webp(bilinear_resize(decode_webp(payload), w, h))
-
-
 # --- FLAC (lossless compressed audio; RFC 9639 subset) ------------------------
 #
 # Pure-Python bit-level codec for the dominant lossless audio format:
@@ -2835,69 +2913,6 @@ def _crc16(data: bytes) -> int:
     for b in data:
         c = _FLAC_CRC16[((c >> 8) ^ b) & 0xFF] ^ ((c << 8) & 0xFFFF)
     return c
-
-
-class _MsbWriter:
-    """MSB-first bit writer (FLAC bit order; VP8L's _LsbWriter is the
-    little-endian twin)."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, v: int, bits: int) -> None:
-        self.acc = (self.acc << bits) | (v & ((1 << bits) - 1))
-        self.n += bits
-        while self.n >= 8:
-            self.n -= 8
-            self.buf.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def write_unary(self, q: int) -> None:
-        self.write(1, q + 1)  # q zero bits then a terminating 1
-
-    def align(self) -> None:
-        if self.n:
-            self.write(0, 8 - self.n)
-
-
-class _MsbReader:
-    """MSB-first bit reader over a byte window."""
-
-    def __init__(self, data: bytes, bitpos: int = 0) -> None:
-        self.data = data
-        self.bitpos = bitpos
-        self.nbits = 8 * len(data)
-
-    def read(self, k: int) -> int:
-        end = self.bitpos + k
-        if end > self.nbits:
-            raise MediaDecodeError("flac: truncated bitstream")
-        byte0, bit0 = divmod(self.bitpos, 8)
-        byte1 = (end + 7) // 8
-        chunk = int.from_bytes(self.data[byte0:byte1], "big")
-        self.bitpos = end
-        return (chunk >> (8 * (byte1 - byte0) - bit0 - k)) & ((1 << k) - 1)
-
-    def read_signed(self, k: int) -> int:
-        v = self.read(k)
-        return v - (1 << k) if v & (1 << (k - 1)) else v
-
-    def read_unary(self) -> int:
-        q = 0
-        while True:
-            byte0, bit0 = divmod(self.bitpos, 8)
-            if byte0 >= len(self.data):
-                raise MediaDecodeError("flac: truncated unary code")
-            cur = self.data[byte0] & (0xFF >> bit0)
-            if cur == 0:
-                q += 8 - bit0
-                self.bitpos += 8 - bit0
-                continue
-            zeros = (7 - (cur.bit_length() - 1)) - bit0
-            self.bitpos += zeros + 1
-            return q + zeros
 
 
 def _zigzag(v: int) -> int:
@@ -3050,13 +3065,12 @@ def _flac_residual(rd: _MsbReader, bs: int, order: int) -> "np.ndarray":
     return np.asarray(out, np.int64)
 
 
-def decode_flac(payload: bytes) -> tuple[int, int, int, "np.ndarray"]:
-    """'fLaC' stream → (sample_rate, channels, bits_per_sample,
-    interleaved int32 samples). Verifies frame-header CRC-8, frame
-    CRC-16, the STREAMINFO sample total and (when present) the
-    STREAMINFO MD5 of the decoded PCM."""
-    import hashlib
-
+def _flac_streaminfo(payload: bytes) -> tuple[dict, int]:
+    """The one parse of a FLAC stream's metadata blocks — decode_flac
+    runs it first, the header probe runs it alone. STREAMINFO must be
+    the first block, exactly 34 bytes, and appear once (RFC 9639
+    §8.1-8.2), with a nonzero sample rate (the stream is audio).
+    Returns (STREAMINFO fields, offset of the first frame)."""
     if payload[:4] != b"fLaC":
         raise MediaDecodeError("flac: bad magic")
     pos, ln = 4, len(payload)
@@ -3071,10 +3085,12 @@ def decode_flac(payload: bytes) -> tuple[int, int, int, "np.ndarray"]:
         body = payload[pos + 4 : pos + 4 + blen]
         if len(body) < blen:
             raise MediaDecodeError("flac: truncated metadata block")
+        if (btype == 0) != (info is None):
+            raise MediaDecodeError("flac: STREAMINFO must be the first block, once")
         if btype == 0:
             if blen != 34:
                 raise MediaDecodeError("flac: STREAMINFO must be 34 bytes")
-            r = _MsbReader(body, bitpos=80)  # skip block/frame size bounds
+            r = _MsbReader(body, "flac", 80)  # skip block/frame size bounds
             info = {
                 "rate": r.read(20),
                 "channels": r.read(3) + 1,
@@ -3082,18 +3098,30 @@ def decode_flac(payload: bytes) -> tuple[int, int, int, "np.ndarray"]:
                 "total": r.read(36),
                 "md5": body[18:34],
             }
+            if not info["rate"]:
+                raise MediaDecodeError("flac: zero sample rate")
         elif btype == 127:
             raise MediaDecodeError("flac: invalid metadata block type 127")
         pos += 4 + blen
-    if info is None:
-        raise MediaDecodeError("flac: missing STREAMINFO")
+    return info, pos
+
+
+def decode_flac(payload: bytes) -> tuple[int, int, int, "np.ndarray"]:
+    """'fLaC' stream → (sample_rate, channels, bits_per_sample,
+    interleaved int32 samples). Verifies frame-header CRC-8, frame
+    CRC-16, the STREAMINFO sample total and (when present) the
+    STREAMINFO MD5 of the decoded PCM."""
+    import hashlib
+
+    info, pos = _flac_streaminfo(payload)
     if info["total"] > MAX_DECODE_SAMPLES:
         raise MediaDecodeError("flac: stream exceeds decode sample cap")
     nch = info["channels"]
     chans: list[np.ndarray] = []
     decoded = 0
+    ln = len(payload)
     while pos < ln:
-        rd = _MsbReader(payload, bitpos=8 * pos)
+        rd = _MsbReader(payload, "flac", 8 * pos)
         if rd.read(14) != 0b11111111111110:
             raise MediaDecodeError("flac: lost frame sync")
         if rd.read(1):
@@ -3574,27 +3602,6 @@ def _pcm16_features(rate: int, channels: int, s: "np.ndarray") -> list[float]:
 VIDEO_TAG = 3.0
 
 
-def _dib_pack(img: np.ndarray) -> bytes:
-    """(h, w, 3) RGB → bottom-up 4-byte-padded BGR rows (the shared
-    BMP/AVI 24-bit BI_RGB raster)."""
-    h, w = img.shape[0], img.shape[1]
-    stride = ((w * 3 + 3) // 4) * 4
-    bgr = img[..., ::-1].astype(np.uint8)
-    pad = b"\x00" * (stride - w * 3)
-    return b"".join(r.tobytes() + pad for r in bgr[::-1])
-
-
-def _dib_unpack(data: bytes, w: int, h: int, top_down: bool = False) -> np.ndarray:
-    stride = ((w * 3 + 3) // 4) * 4
-    if len(data) < stride * h:
-        raise MediaDecodeError("avi: frame chunk shorter than the DIB raster")
-    rows = np.frombuffer(data, np.uint8, count=stride * h).reshape(h, stride)
-    img = rows[:, : w * 3].reshape(h, w, 3)
-    if not top_down:
-        img = img[::-1]
-    return img[:, :, ::-1].copy()
-
-
 def encode_avi(frames: "list[np.ndarray]", us_per_frame: int = 40000) -> bytes:
     """Uncompressed 24-bit RGB frames (equal shapes) → RIFF AVI with
     raw 'DIB ' video: avih/strh/strf headers, '00db' movi chunks,
@@ -3674,64 +3681,64 @@ def encode_avi(frames: "list[np.ndarray]", us_per_frame: int = 40000) -> bytes:
     return b"RIFF" + dw(len(body)) + body
 
 
-def decode_avi_frames(payload: bytes) -> "tuple[list[np.ndarray], int]":
-    """RIFF AVI (raw 'DIB ' video) → ([(h, w, 3) RGB frames],
-    us_per_frame). Walks the chunk tree; only the uncompressed 24-bit
-    BI_RGB profile decodes — compressed handlers raise into the
-    per-row decode_error channel (registered-kernel territory)."""
+def _avi_header(payload: bytes):
+    """The one parse of an AVI's chunk tree — decode_avi_frames runs it
+    first, the header probe runs it alone. Every LIST is walked the
+    same way whatever its form type (hdrl, strl, movi or any other);
+    the last avih and the first 'vids' stream's strf count. Returns
+    (w, h, us_per_frame, avih total frames, bpp, compression,
+    top_down, [(lo, hi) of each '##db'/'##dc' frame chunk])."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise MediaDecodeError("avi: not a RIFF/AVI payload")
-    w = h = None
-    us_per_frame = total = None
-    compression = bpp = None
-    top_down = False
-    cur_stream = None
-    chunks: list[bytes] = []
-
-    def walk(lo: int, hi: int) -> None:
-        nonlocal w, h, us_per_frame, total, compression, bpp
-        nonlocal top_down, cur_stream
-        pos = lo
-        while pos + 8 <= hi:
-            cid = payload[pos : pos + 4]
-            size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-            body_lo, body_hi = pos + 8, pos + 8 + size
-            if body_hi > hi:
-                raise MediaDecodeError("avi: truncated chunk")
+    avih = strf = stream = None
+    frames: list[tuple[int, int]] = []
+    end = min(len(payload), 8 + int.from_bytes(payload[4:8], "little"))
+    walks = [_riff_chunks(payload, 12, end, "avi")]  # one per open LIST
+    while walks:
+        for cid, lo, hi in walks[-1]:
             if cid == b"LIST":
-                walk(body_lo + 4, body_hi)
-            elif cid == b"avih":
-                if size < 56:
+                walks.append(_riff_chunks(payload, lo + 4, hi, "avi"))
+                break
+            if cid == b"avih":
+                if hi - lo < 56:
                     raise MediaDecodeError("avi: short avih header")
-                vals = [
-                    int.from_bytes(payload[body_lo + 4 * i : body_lo + 4 * i + 4], "little")
+                avih = [
+                    int.from_bytes(payload[lo + 4 * i : lo + 4 * i + 4], "little")
                     for i in range(10)
                 ]
-                us_per_frame, total = vals[0], vals[4]
-                w, h = vals[8], vals[9]
             elif cid == b"strh":
-                cur_stream = payload[body_lo : body_lo + 4]
-            elif cid == b"strf" and cur_stream == b"vids" and compression is None:
+                stream = payload[lo : lo + 4]
+            elif cid == b"strf" and stream == b"vids" and strf is None:
                 # only the VIDEO stream's strf is a BITMAPINFOHEADER —
                 # an audio-first stream list would otherwise misread a
                 # WAVEFORMATEX as bitmap fields
-                if size < 40:
+                if hi - lo < 40:
                     raise MediaDecodeError("avi: short strf header")
-                bih_h = int.from_bytes(
-                    payload[body_lo + 8 : body_lo + 12], "little", signed=True
-                )
-                top_down = bih_h < 0  # negative biHeight = top-down raster
-                bpp = int.from_bytes(payload[body_lo + 14 : body_lo + 16], "little")
-                compression = int.from_bytes(
-                    payload[body_lo + 16 : body_lo + 20], "little"
-                )
+                strf = payload[lo : lo + 20]
             elif cid[2:4] in (b"db", b"dc"):
-                chunks.append(payload[body_lo:body_hi])
-            pos = body_hi + (size & 1)
-
-    walk(12, min(len(payload), 8 + int.from_bytes(payload[4:8], "little")))
-    if w is None or us_per_frame is None:
+                frames.append((lo, hi))
+        else:
+            walks.pop()
+    if avih is None:
         raise MediaDecodeError("avi: missing avih header")
+    bpp = compression = None
+    top_down = False
+    if strf is not None:
+        # negative biHeight = top-down raster
+        top_down = int.from_bytes(strf[8:12], "little", signed=True) < 0
+        bpp = int.from_bytes(strf[14:16], "little")
+        compression = int.from_bytes(strf[16:20], "little")
+    return avih[8], avih[9], avih[0], avih[4], bpp, compression, top_down, frames
+
+
+def decode_avi_frames(payload: bytes) -> "tuple[list[np.ndarray], int]":
+    """RIFF AVI (raw 'DIB ' video) → ([(h, w, 3) RGB frames],
+    us_per_frame). Only the uncompressed 24-bit BI_RGB profile
+    decodes — compressed handlers raise into the per-row decode_error
+    channel (registered-kernel territory)."""
+    w, h, us_per_frame, total, bpp, compression, top_down, chunks = _avi_header(
+        payload
+    )
     if compression != 0 or bpp != 24:
         raise MediaDecodeError(
             f"avi: only raw 24-bit BI_RGB frames supported "
@@ -3741,11 +3748,12 @@ def decode_avi_frames(payload: bytes) -> "tuple[list[np.ndarray], int]":
         raise MediaDecodeError(
             f"avi: refusing {len(chunks)}x{w}x{h} (decoder pixel cap)"
         )
-    if total is not None and len(chunks) != total:
+    if len(chunks) != total:
         raise MediaDecodeError(
             f"avi: {len(chunks)} frame chunks, avih says {total}"
         )
-    return [_dib_unpack(c, w, h, top_down) for c in chunks], us_per_frame
+    frames = [_dib_unpack(payload[lo:hi], w, h, top_down, "avi") for lo, hi in chunks]
+    return frames, us_per_frame
 
 
 def avi_frame_sample(payload: bytes, n_frames: int) -> "list[tuple[int, int, bytes]]":
@@ -3754,14 +3762,10 @@ def avi_frame_sample(payload: bytes, n_frames: int) -> "list[tuple[int, int, byt
     container's own microsecond timeline, re-encode as PPM so
     downstream feature extraction runs the real image kernel."""
     frames, uspf = decode_avi_frames(payload)
-    nf = len(frames)
-    if nf == 0:
+    if not frames:
         raise MediaDecodeError("avi: no frames to sample")
-    out = []
-    for j in range(n_frames):
-        fi = (j * nf) // n_frames
-        out.append((j, (fi * uspf) // 1000, encode_ppm(frames[fi])))
-    return out
+    starts = [(k * uspf) // 1000 for k in range(len(frames))]
+    return _pick_frames(frames, starts, n_frames)
 
 
 def avi_features(payload: bytes) -> list[float]:
@@ -4065,99 +4069,75 @@ def _ogg_header_meta(payload: bytes) -> tuple[None, None, int]:
 # job. These parsers walk only the container structure: JPEG skips
 # entropy segments by length, GIF skips LZW sub-blocks without
 # decompressing, animated WebP reads ANMF headers without touching the
-# VP8L streams. Each returns (width, height, duration_ms) with None
-# for fields the format doesn't carry.
+# VP8L streams. WAV, AVI and FLAC run the same header parse as their
+# decoders (_wav_header, _avi_header, _flac_streaminfo), so a payload
+# the decoder accepts is one the probe accepts. Each returns (width,
+# height, duration_ms) with None for fields the format doesn't carry.
 
 
-def probe_header(payload: bytes) -> tuple[int | None, int | None, int | None]:
-    """Dispatch on magic bytes; raises MediaDecodeError on a payload
-    whose header is malformed for its own magic."""
-    if payload[:2] == b"P6":
-        (w, h, _), _ = _ppm_header(payload)
-        return w, h, None
-    if payload[:2] == b"BM":
-        if len(payload) < 26:
-            raise MediaDecodeError("bmp: truncated header")
-        w = int.from_bytes(payload[18:22], "little", signed=True)
-        h = abs(int.from_bytes(payload[22:26], "little", signed=True))
-        return w, h, None
-    if payload[:8] == _PNG_SIG:
-        if len(payload) < 24 or payload[12:16] != b"IHDR":
-            raise MediaDecodeError("png: truncated IHDR")
-        return (
-            int.from_bytes(payload[16:20], "big"),
-            int.from_bytes(payload[20:24], "big"),
-            None,
-        )
-    if payload[:3] == b"\xff\xd8\xff":
-        return _jpeg_header_dims(payload) + (None,)
-    if payload[:4] == b"GIF8":
-        return _gif_header_meta(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        return _webp_header_meta(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        rate, _ch, n_frames = _wav_header_meta(payload)
-        return None, None, (1000 * n_frames) // rate if rate else None
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return _avi_header_meta(payload)
-    if payload[4:8] == b"ftyp":
-        return _mp4_header_meta(payload)
-    if payload[:4] == b"fLaC":
-        return None, None, _flac_header_duration_ms(payload)
-    if payload[:3] == b"ID3":
-        return None, None, _mp3_header_duration_ms(payload)
-    if payload[:4] == b"OggS":
-        return _ogg_header_meta(payload)
-    raise MediaDecodeError("probe: unknown magic")
+def probe_header(
+    payload: bytes, fmt: "MediaFormat | None" = None
+) -> tuple[int | None, int | None, int | None]:
+    """Run the probe of the payload's format (sniffed unless given);
+    raises MediaDecodeError on an unknown magic or on a header
+    malformed for its own format."""
+    fmt = fmt or sniff(payload)
+    if fmt is None:
+        raise MediaDecodeError("probe: unknown magic")
+    return fmt.probe(payload)
+
+
+def _ppm_header_meta(payload: bytes) -> tuple[int, int, None]:
+    (w, h, _), _ = _ppm_tokens(payload, 3)
+    return w, h, None
+
+
+def _bmp_header_meta(payload: bytes) -> tuple[int, int, None]:
+    if len(payload) < 26:
+        raise MediaDecodeError("bmp: truncated header")
+    w = int.from_bytes(payload[18:22], "little", signed=True)
+    h = abs(int.from_bytes(payload[22:26], "little", signed=True))
+    return w, h, None
+
+
+def _png_header_meta(payload: bytes) -> tuple[int, int, None]:
+    if len(payload) < 24 or payload[12:16] != b"IHDR":
+        raise MediaDecodeError("png: truncated IHDR")
+    return (
+        int.from_bytes(payload[16:20], "big"),
+        int.from_bytes(payload[20:24], "big"),
+        None,
+    )
+
+
+def _wav_header_meta(payload: bytes) -> tuple[None, None, int]:
+    """Duration from the frame count: the fact chunk when there is one
+    (the true count, pad samples excluded), else the data bytes —
+    samples_per_block frames per block for IMA ADPCM."""
+    tag, _ch, rate, block, _bits, spb, fact, lo, hi = _wav_header(payload)
+    if fact is not None:
+        n_frames = fact
+    elif tag == 0x11:
+        n_frames = ((hi - lo) // block) * spb
+    else:
+        n_frames = (hi - lo) // block
+    return None, None, (1000 * n_frames) // rate
 
 
 def _avi_header_meta(payload: bytes) -> tuple[int, int, int]:
-    """(width, height, duration_ms) from the avih MainAVIHeader alone
-    (dwMicroSecPerFrame · dwTotalFrames) — no movi walk, no raster."""
-    pos, ln = 12, len(payload)
-    while pos + 8 <= ln:
-        cid = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        if cid == b"LIST":
-            if payload[pos + 8 : pos + 12] == b"hdrl":
-                pos += 12
-                continue
-        elif cid == b"avih":
-            if size < 56 or pos + 8 + 56 > ln:
-                raise MediaDecodeError("avi: short avih header")
-            v = [
-                int.from_bytes(payload[pos + 8 + 4 * i : pos + 12 + 4 * i], "little")
-                for i in range(10)
-            ]
-            return v[8], v[9], (v[0] * v[4]) // 1000
-        pos += 8 + size + (size & 1)
-    raise MediaDecodeError("avi: missing avih header")
+    """avih dims and dwMicroSecPerFrame · dwTotalFrames — no raster."""
+    w, h, us_per_frame, total = _avi_header(payload)[:4]
+    return w, h, (us_per_frame * total) // 1000
 
 
-def _flac_header_duration_ms(payload: bytes) -> int | None:
-    """STREAMINFO total-samples / sample-rate — 38 header bytes, no
-    frame decode. None when the stream marks the total unknown (0)."""
-    if len(payload) < 8 or (payload[4] & 0x7F) != 0:
-        raise MediaDecodeError("flac: STREAMINFO must be the first metadata block")
-    body = payload[8 : 8 + int.from_bytes(payload[5:8], "big")]
-    if len(body) < 34:
-        raise MediaDecodeError("flac: truncated STREAMINFO")
-    r = _MsbReader(body, bitpos=80)
-    rate = r.read(20)
-    r.read(3)
-    r.read(5)
-    total = r.read(36)
-    if not rate:
-        raise MediaDecodeError("flac: zero sample rate")
-    return (1000 * total) // rate if total else None
+def _flac_header_meta(payload: bytes) -> tuple[None, None, int | None]:
+    """STREAMINFO total-samples / sample-rate, no frame decode. None
+    when the stream marks the total unknown (0)."""
+    info, _ = _flac_streaminfo(payload)
+    return None, None, (1000 * info["total"]) // info["rate"] if info["total"] else None
 
 
-def _ppm_header(payload: bytes):
-    toks, pos = _ppm_tokens(payload, 3)
-    return (toks[0], toks[1], toks[2]), pos
-
-
-def _jpeg_header_dims(payload: bytes) -> tuple[int, int]:
+def _jpeg_header_meta(payload: bytes) -> tuple[int, int, None]:
     """Marker walk to the first SOFn — segment-length hops only."""
     pos = 2
     while pos + 4 <= len(payload):
@@ -4175,6 +4155,7 @@ def _jpeg_header_dims(payload: bytes) -> tuple[int, int]:
             return (
                 int.from_bytes(body[3:5], "big"),
                 int.from_bytes(body[1:3], "big"),
+                None,
             )
         if marker == 0xDA:
             break  # scan data reached without SOF
@@ -4252,48 +4233,15 @@ def _webp_header_meta(payload: bytes) -> tuple[int, int, int | None]:
     raise MediaDecodeError("webp: no image chunk in header walk")
 
 
-def _wav_header_meta(payload: bytes) -> tuple[int, int, int]:
-    """(sample_rate, channels, n_frames) from fmt + fact + data chunk
-    sizes. Block-based codecs (IMA ADPCM) count samples_per_block
-    frames per block; a fact chunk overrides (the true frame count,
-    pad samples excluded)."""
-    pos = 12
-    rate = ch = block = None
-    fmt_tag = spb = fact = data_len = None
-    while pos + 8 <= len(payload):
-        tag = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        if tag == b"fmt " and size >= 16:
-            body = payload[pos + 8 : pos + 8 + size]
-            fmt_tag = int.from_bytes(body[0:2], "little")
-            ch = int.from_bytes(body[2:4], "little")
-            rate = int.from_bytes(body[4:8], "little")
-            block = int.from_bytes(body[12:14], "little")
-            if len(body) >= 20:
-                spb = int.from_bytes(body[18:20], "little")
-        elif tag == b"fact" and size >= 4:
-            fact = int.from_bytes(payload[pos + 8 : pos + 12], "little")
-        elif tag == b"data":
-            data_len = size
-        pos += 8 + size + (size & 1)
-    if not rate or not block or data_len is None:
-        raise MediaDecodeError("wav: missing fmt or data in header walk")
-    if fact is not None:
-        return rate, ch, fact
-    if fmt_tag == 0x11 and spb:
-        return rate, ch, (data_len // block) * spb
-    return rate, ch, data_len // block
-
-
 _MP3_BITRATES = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320]
 _MP3_RATES = [44100, 48000, 32000]
 
 
-def _mp3_header_duration_ms(payload: bytes) -> int | None:
+def _mp3_header_meta(payload: bytes) -> tuple[None, None, int | None]:
     """Skip the ID3v2 tag (syncsafe size), find the first MPEG-1
     Layer III frame sync, estimate duration from the CBR bitrate.
-    Returns None when no frame follows the tag (tag-only payloads —
-    the stub-planted corpus — have no audio to measure)."""
+    The duration is None when no frame follows the tag (tag-only
+    payloads — the stub-planted corpus — have no audio to measure)."""
     if len(payload) < 10:
         raise MediaDecodeError("mp3: truncated ID3 header")
     size = 0
@@ -4304,15 +4252,15 @@ def _mp3_header_duration_ms(payload: bytes) -> int | None:
     pos = 10 + size
     hdr = payload[pos : pos + 4]
     if len(hdr) < 4 or hdr[0] != 0xFF or (hdr[1] & 0xE0) != 0xE0:
-        return None
+        return None, None, None
     if (hdr[1] & 0x1E) != 0x1A:  # MPEG-1 Layer III only
-        return None
+        return None, None, None
     br_idx = hdr[2] >> 4
     sr_idx = (hdr[2] >> 2) & 3
     if br_idx in (0, 15) or sr_idx == 3:
-        return None
+        return None, None, None
     bitrate = _MP3_BITRATES[br_idx] * 1000
-    return (len(payload) - pos) * 8 * 1000 // bitrate
+    return None, None, (len(payload) - pos) * 8 * 1000 // bitrate
 
 
 # --- G.711 mu-law / A-law (WAVE format tags 0x07 / 0x06) -------------------------
@@ -4413,3 +4361,81 @@ def encode_wav_g711(
         + data
     )
     return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+
+# --- the format table ----------------------------------------------------------
+#
+# Every format the pipeline knows, declared ONCE, in sniff order: its
+# magic, kind and kernels. The native sniff (multimodal.sniff_media_meta),
+# the worker-side dispatch (sniff), the kernel lookups and probe_header
+# are all read from it, so adding a format is one entry here.
+
+
+@dataclass(frozen=True)
+class MediaFormat:
+    name: str
+    kind: str  # "image" | "audio" | "video"
+    magic: bytes
+    probe: Callable[[bytes], tuple]  # → (width, height, duration_ms)
+    magic_at: int = 0  # ISO BMFF: the box type at bytes 4-8 is the magic
+    riff_form: bytes | None = None  # a RIFF magic also needs this form at 8-12
+    features: Callable[[bytes], list[float]] | None = None
+    resize: Callable[[bytes, int, int], bytes] | None = None
+    sample: Callable[[bytes, int], list] | None = None  # real frame sampler
+
+    def matches(self, payload: bytes) -> bool:
+        at = self.magic_at
+        return payload[at : at + len(self.magic)] == self.magic and (
+            self.riff_form is None or payload[8:12] == self.riff_form
+        )
+
+
+FORMATS: dict[str, MediaFormat] = {
+    f.name: f
+    for f in (
+        MediaFormat(
+            "png", "image", _PNG_SIG, _png_header_meta,
+            features=png_features, resize=partial(_recode, decode_png, encode_png),
+        ),
+        MediaFormat(
+            "jpeg", "image", b"\xff\xd8\xff", _jpeg_header_meta,
+            features=jpeg_features, resize=partial(_recode, decode_jpeg, encode_jpeg),
+        ),
+        MediaFormat(
+            "gif", "image", b"GIF8", _gif_header_meta,
+            # nearest-neighbour, so the palette is kept
+            features=gif_features, resize=gif_resize, sample=gif_frame_sample,
+        ),
+        MediaFormat(
+            "ppm", "image", b"P6", _ppm_header_meta,
+            features=ppm_features, resize=partial(_recode, decode_ppm, encode_ppm),
+        ),
+        MediaFormat(
+            "bmp", "image", b"BM", _bmp_header_meta,
+            features=bmp_features, resize=partial(_recode, decode_bmp, encode_bmp),
+        ),
+        MediaFormat(
+            "wav", "audio", b"RIFF", _wav_header_meta, riff_form=b"WAVE",
+            features=wav_features,
+        ),
+        MediaFormat(
+            "webp", "image", b"RIFF", _webp_header_meta, riff_form=b"WEBP",
+            features=webp_features, resize=partial(_recode, decode_webp, encode_webp),
+            sample=webp_frame_sample,
+        ),
+        MediaFormat(
+            "avi", "video", b"RIFF", _avi_header_meta, riff_form=b"AVI ",
+            # frame by frame, keeping the container timing
+            features=avi_features, resize=avi_resize, sample=avi_frame_sample,
+        ),
+        MediaFormat("flac", "audio", b"fLaC", _flac_header_meta, features=flac_features),
+        MediaFormat("mp3", "audio", b"ID3", _mp3_header_meta),
+        MediaFormat("ogg", "audio", b"OggS", _ogg_header_meta),
+        MediaFormat("mp4", "video", b"ftyp", _mp4_header_meta, magic_at=4),
+    )
+}
+
+
+def sniff(payload: bytes) -> MediaFormat | None:
+    """The first format of the table whose magic the payload carries."""
+    return next((f for f in FORMATS.values() if f.matches(payload)), None)

@@ -3,7 +3,7 @@ metadata; decode/feature-extract as Arrow-batched mapInPandas stages.
 
 Decode kernels: PPM (P6), 24-bit BMP, PNG (zlib + unfilter), baseline
 JPEG (Huffman + IDCT), GIF (LZW, incl. animation) and lossless WebP
-(VP8L) images — every image format the sniff chain knows — plus PCM16
+(VP8L) images — every image format of the format table — plus PCM16
 WAV / IMA ADPCM / FLAC audio and raw-DIB AVI video decode FOR REAL
 via the pure-numpy codecs in media_codecs.py (decode + resize +
 re-encode); animated GIFs, animated WebPs and raw-DIB AVIs make
@@ -15,6 +15,11 @@ deterministic byte-hash stub
 remains as the documented fallback so the plumbing — schema,
 partitioning, batch shape, UDF signatures — is exercised for every
 kind.
+
+Formats, their kinds and their kernels are declared once, in
+media_codecs.FORMATS; the native sniff (sniff_media_meta), the
+worker-side dispatch (_sniff_one, _kernel, _real_frame_sample) and
+the header probe (probe_media_meta) all read that table.
 
 Schema convention:
     media: binary                 -- the opaque payload
@@ -77,45 +82,17 @@ def _fake_decode(payload: bytes, dim: int = 8) -> list[float]:
     return [((1_000_000 * a) // (255 * n)) / 1e6 for a in acc]
 
 
-# Real kernels by sniffed format (_MAGIC_CHAIN names). A row gets one
-# only when the payload's sniffed kind is the row's kind; anything else
-# (a WAV payload in an image row, mp3/ogg/mp4 with no kernel yet) gets
-# the byte-hash stub.
-_FEATURES: dict[str, Callable[[bytes], list[float]]] = {
-    "ppm": media_codecs.ppm_features,
-    "bmp": media_codecs.bmp_features,
-    "png": media_codecs.png_features,
-    "jpeg": media_codecs.jpeg_features,
-    "gif": media_codecs.gif_features,
-    "webp": media_codecs.webp_features,
-    "wav": media_codecs.wav_features,
-    "flac": media_codecs.flac_features,
-    "avi": media_codecs.avi_features,
-}
-_RESIZES: dict[str, Callable[[bytes, int, int], bytes]] = {
-    "ppm": media_codecs.ppm_resize,
-    "bmp": media_codecs.bmp_resize,
-    "png": media_codecs.png_resize,
-    "jpeg": media_codecs.jpeg_resize,
-    "gif": media_codecs.gif_resize,
-    "webp": media_codecs.webp_resize,
-    "avi": media_codecs.avi_resize,
-}
-
-
-def _kernel(table: dict, kind: str, payload: bytes):
-    """The real kernel of `table` for this payload's sniffed format when
-    that format is of `kind`, else None."""
-    fmt = _sniff_one(payload)
-    return table.get(fmt) if _FORMAT_KIND.get(fmt) == kind else None
+def _kernel(field: str, kind: str, payload: bytes):
+    """The real `field` kernel (features / resize) of the payload's
+    sniffed format (media_codecs.FORMATS) when that format is of
+    `kind`, else None: a WAV payload in an image row, or mp3/ogg/mp4
+    with no kernel yet, gets the byte-hash stub."""
+    fmt = media_codecs.sniff(payload)
+    return getattr(fmt, field) if fmt is not None and fmt.kind == kind else None
 
 
 def _default_decode(kind: str, payload: bytes) -> list[float]:
-    return (_kernel(_FEATURES, kind, payload) or _fake_decode)(payload)
-
-
-def _default_image_decode(payload: bytes) -> list[float]:
-    return _default_decode("image", payload)
+    return (_kernel("features", kind, payload) or _fake_decode)(payload)
 
 
 def _real_decode(kind: str):
@@ -127,37 +104,13 @@ def _real_decode(kind: str):
     raise NotImplementedError(f"no decoder registered for media kind {kind!r}")
 
 
-# Single source of truth for the magic chain — consumed by BOTH the
-# native sniff (sniff_media_meta) and the worker-side python dispatcher
-# (_sniff_one), so a format added to one cannot silently drift from the
-# other (the two used to disagree on the PNG prefix length). Entries:
-# (prefix, RIFF form type at bytes 9-12 or None, format, kind).
-_MAGIC_CHAIN: "list[tuple[bytes, int, bytes | None, str, str]]" = [
-    # (magic bytes, magic offset, RIFF form at 8:12 or None, format, kind)
-    (b"\x89PNG\r\n\x1a\n", 0, None, "png", "image"),
-    (b"\xff\xd8\xff", 0, None, "jpeg", "image"),
-    (b"GIF8", 0, None, "gif", "image"),
-    (b"P6", 0, None, "ppm", "image"),
-    (b"BM", 0, None, "bmp", "image"),
-    (b"RIFF", 0, b"WAVE", "wav", "audio"),
-    (b"RIFF", 0, b"WEBP", "webp", "image"),
-    (b"RIFF", 0, b"AVI ", "avi", "video"),
-    (b"fLaC", 0, None, "flac", "audio"),
-    (b"ID3", 0, None, "mp3", "audio"),
-    (b"OggS", 0, None, "ogg", "audio"),
-    # ISO BMFF: the box TYPE at bytes 4-8 is the signature (bytes 0-4
-    # are the ftyp box size, which varies)
-    (b"ftyp", 4, None, "mp4", "video"),
-]
-_FORMAT_KIND = {name: kind for _, _, _, name, kind in _MAGIC_CHAIN}
-
-
 def sniff_media_meta(df: DataFrame, media_col: str = "media") -> DataFrame:
     """Magic-byte container sniff (native expressions, no decode):
     fills media_meta.kind/format from the payload prefix. Built from
-    _MAGIC_CHAIN; RIFF is a container, so its entries also match the
-    form type at bytes 9-12 (a bare-RIFF→wav mapping would misclass
-    every webp)."""
+    media_codecs.FORMATS, the table the worker-side dispatch (_sniff_one)
+    reads too; RIFF is a container, so its entries also match the form
+    type at bytes 9-12 (a bare-RIFF→wav mapping would misclass every
+    webp)."""
     b = F.col(media_col)
 
     def magic(sig: bytes, off: int) -> "F.Column":
@@ -168,12 +121,13 @@ def sniff_media_meta(df: DataFrame, media_col: str = "media") -> DataFrame:
     riff_form = F.hex(F.substring(b, 9, 4))
     fmt = None
     kinds = {}
-    for prefix, off, form, name, k in _MAGIC_CHAIN:
-        cond = magic(prefix, off)
-        if form is not None:
-            cond = cond & (riff_form == form.hex().upper())
-        fmt = F.when(cond, F.lit(name)) if fmt is None else fmt.when(cond, F.lit(name))
-        kinds.setdefault(k, []).append(name)
+    for f in media_codecs.FORMATS.values():
+        cond = magic(f.magic, f.magic_at)
+        if f.riff_form is not None:
+            cond = cond & (riff_form == f.riff_form.hex().upper())
+        name = F.lit(f.name)
+        fmt = F.when(cond, name) if fmt is None else fmt.when(cond, name)
+        kinds.setdefault(f.kind, []).append(f.name)
     fmt = fmt.otherwise(F.lit("unknown"))
     kind = None
     for k, names in kinds.items():
@@ -278,11 +232,7 @@ def _fake_resize(payload: bytes, w: int, h: int) -> bytes:
 
 
 def _default_resize(kind: str, payload: bytes, w: int, h: int) -> bytes:
-    return (_kernel(_RESIZES, kind, payload) or _fake_resize)(payload, w, h)
-
-
-def _default_image_resize(payload: bytes, w: int, h: int) -> bytes:
-    return _default_resize("image", payload, w, h)
+    return (_kernel("resize", kind, payload) or _fake_resize)(payload, w, h)
 
 
 def resize_media(
@@ -346,11 +296,6 @@ def resize_media(
 FRAME_SCHEMA = "key string, frame_idx int, ts_ms long, frame binary"
 
 _SAMPLERS: dict[str, Callable[[bytes, int], list]] = {}
-_BUILTIN_SAMPLERS: dict[str, Callable[[bytes, int], list]] = {
-    "gif": media_codecs.gif_frame_sample,
-    "webp": media_codecs.webp_frame_sample,
-    "avi": media_codecs.avi_frame_sample,
-}
 
 
 def register_sampler(fmt: str, fn: Callable[[bytes, int], list]) -> None:
@@ -362,25 +307,21 @@ def register_sampler(fmt: str, fn: Callable[[bytes, int], list]) -> None:
 
 def _real_frame_sample(payload: bytes, n_frames: int):
     """Dispatch to a real sampler when one exists for the payload's
-    sniffed format: animated GIF and animated WebP (VP8X/ANMF) ship
-    built-in (decode + composite, frames re-encoded as PPM,
-    timestamps from the file's own delay timeline). Returns None when
-    no real sampler applies — caller falls back to the deterministic
-    byte-slice stub."""
-    fmt = _sniff_one(payload)
-    fn = _SAMPLERS.get(fmt) or _BUILTIN_SAMPLERS.get(fmt)
+    sniffed format: animated GIF, animated WebP (VP8X/ANMF) and
+    raw-DIB AVI ship built-in (the table's `sample` kernels: decode,
+    frames re-encoded as PPM, timestamps from the file's own
+    timeline). Returns None when no real sampler applies — caller
+    falls back to the deterministic byte-slice stub."""
+    fmt = media_codecs.sniff(payload)
+    fn = _SAMPLERS.get(fmt.name if fmt else "unknown") or getattr(fmt, "sample", None)
     return fn(payload, n_frames) if fn is not None else None
 
 
 def _sniff_one(payload: bytes) -> str:
-    """Python-side twin of sniff_media_meta (worker-side dispatch for
-    registered samplers) — driven by the SAME _MAGIC_CHAIN table."""
-    for prefix, off, form, name, _kind in _MAGIC_CHAIN:
-        if payload[off : off + len(prefix)] == prefix and (
-            form is None or payload[8:12] == form
-        ):
-            return name
-    return "unknown"
+    """Python-side twin of sniff_media_meta: the sniffed format's name,
+    or "unknown"."""
+    fmt = media_codecs.sniff(payload)
+    return "unknown" if fmt is None else fmt.name
 
 
 def sample_frames(
@@ -499,10 +440,11 @@ def probe_media_meta(
             keys, fmts, ws, hs, durs, errs = [], [], [], [], [], []
             for key, raw in zip(b[key_col].tolist(), b[media_col].tolist()):
                 payload = bytes(raw) if raw is not None else b""
+                fmt = media_codecs.sniff(payload)
                 keys.append(key)
-                fmts.append(_sniff_one(payload))
+                fmts.append("unknown" if fmt is None else fmt.name)
                 try:
-                    w, h, dur = media_codecs.probe_header(payload)
+                    w, h, dur = media_codecs.probe_header(payload, fmt)
                     ws.append(w)
                     hs.append(h)
                     durs.append(dur)

@@ -231,19 +231,19 @@ def test_bmp_round_trip_padding_and_bgr():
 def test_bmp_features_match_ppm_for_same_pixels():
     """The two real image codecs must agree: identical pixels encoded
     as PPM and as BMP yield the SAME integer-exact feature vector, and
-    both dispatch through _default_image_decode."""
+    both dispatch through _default_decode("image", …)."""
     import numpy as np
 
     from beats_spark.training.media_codecs import (
         bmp_features, encode_bmp, encode_ppm, ppm_features,
     )
-    from beats_spark.training.multimodal import _default_image_decode
+    from beats_spark.training.multimodal import _default_decode
 
     img = (np.arange(8 * 4 * 3, dtype=np.uint8) % 251).reshape(8, 4, 3)
     fb, fp = bmp_features(encode_bmp(img)), ppm_features(encode_ppm(img))
     assert fb == fp
-    assert _default_image_decode(encode_bmp(img)) == fb
-    assert _default_image_decode(encode_ppm(img)) == fp
+    assert _default_decode("image", encode_bmp(img)) == fb
+    assert _default_decode("image", encode_ppm(img)) == fp
 
 
 def test_bmp_malformed_raises():
@@ -271,10 +271,10 @@ def test_bmp_resize_real_kernel():
     import numpy as np
 
     from beats_spark.training.media_codecs import decode_bmp, encode_bmp
-    from beats_spark.training.multimodal import _default_image_resize
+    from beats_spark.training.multimodal import _default_resize
 
     img = np.full((6, 6, 3), (10, 200, 30), dtype=np.uint8)
-    out = _default_image_resize(encode_bmp(img), 3, 2)
+    out = _default_resize("image", encode_bmp(img), 3, 2)
     dec = decode_bmp(out)
     assert dec.shape == (2, 3, 3)
     assert np.array_equal(dec, np.full((2, 3, 3), (10, 200, 30), dtype=np.uint8))
@@ -403,7 +403,7 @@ def test_png_unsupported_shapes_rejected():
 
 def test_png_resize_real_kernel():
     img = np.full((4, 4, 3), 77, dtype=np.uint8)
-    out = mc.decode_png(mc.png_resize(mc.encode_png(img), 8, 2))
+    out = mc.decode_png(mc.FORMATS["png"].resize(mc.encode_png(img), 8, 2))
     assert out.shape == (2, 8, 3) and (out == 77).all()
 
 
@@ -529,23 +529,24 @@ def test_jpeg_huffman_tables_and_magnitude_coding():
         enc = mc._huff_encode_table(bits, vals)
         dec = mc._huff_decode_table(bits, vals)
         assert sorted(enc) == sorted(vals)
-        wr = mc._BitWriter()
+        wr = mc._MsbWriter()
         for v in vals:
             ln, code = enc[v]
-            wr.put(code, ln)
-        wr.flush()
-        # the writer stuffs FF→FF 00 on the wire; _split_entropy
+            wr.write(code, ln)
+        wr.align(1)
+        # the encoder stuffs FF→FF 00 on the wire and _split_entropy
         # destuffs before the reader sees it — mirror that here
-        rd = mc._BitReader(bytes(wr.out).replace(b"\xff\x00", b"\xff"))
+        wire = mc._jpeg_stuff(wr.buf)
+        rd = mc._MsbReader(wire.replace(b"\xff\x00", b"\xff"), "jpeg")
         for v in vals:
             assert mc._huff_lookup(rd, dec) == v
     for v in range(-2047, 2048):
         s, bitsv = mc._magnitude(v)
         assert mc._extend(bitsv, s) == v
     # stuffing: a run of 1-bits produces FF 00 on the wire
-    wr = mc._BitWriter()
-    wr.put(0xFFFF, 16)
-    assert bytes(wr.out) == b"\xff\x00\xff\x00"
+    wr = mc._MsbWriter()
+    wr.write(0xFFFF, 16)
+    assert mc._jpeg_stuff(wr.buf) == b"\xff\x00\xff\x00"
 
 
 def test_jpeg_round_trip_error_bounds():
@@ -624,8 +625,8 @@ def test_jpeg_features_parity_and_resize():
     assert mc.jpeg_features(payload) == mc.ppm_features(
         mc.encode_ppm(exp.astype(np.uint8))
     )
-    assert multimodal._default_image_decode(payload) == mc.jpeg_features(payload)
-    out = multimodal._default_image_resize(payload, 10, 6)
+    assert multimodal._default_decode("image", payload) == mc.jpeg_features(payload)
+    out = multimodal._default_resize("image", payload, 10, 6)
     img = mc.decode_jpeg(out)
     assert img.shape == (6, 10, 3)
 
@@ -884,13 +885,13 @@ def test_webp_features_parity_and_resize():
     # alpha excluded from features, like PNG
     rgba = np.concatenate([img, rng.randint(0, 256, (6, 10, 1)).astype(np.uint8)], axis=-1)
     assert mc.webp_features(mc.encode_webp(rgba)) == mc.ppm_features(mc.encode_ppm(img))
-    out = mc.decode_webp(mc.webp_resize(mc.encode_webp(img), 5, 3))
+    out = mc.decode_webp(mc.FORMATS["webp"].resize(mc.encode_webp(img), 5, 3))
     assert out.shape == (3, 5, 3)
     assert (out == mc.bilinear_resize(img, 5, 3)).all()
     # kernel dispatch: the default image decoder routes RIFF/WEBP here
     from beats_spark.training import multimodal as mm
 
-    assert mm._default_image_decode(mc.encode_webp(img)) == mc.webp_features(
+    assert mm._default_decode("image", mc.encode_webp(img)) == mc.webp_features(
         mc.encode_webp(img)
     )
 

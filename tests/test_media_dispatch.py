@@ -13,7 +13,7 @@ from beats_spark.training import multimodal as mm
 _IMG = (np.arange(4 * 6 * 3, dtype=np.uint32) * 7 % 256).astype(np.uint8).reshape(4, 6, 3)
 _PCM = (np.arange(800, dtype=np.int32) * 97 % 2001 - 1000).astype(np.int16)
 
-# one planted payload per _MAGIC_CHAIN format
+# one planted payload per media_codecs.FORMATS entry
 PLANTED = {
     "png": mc.encode_png(_IMG),
     "jpeg": mc.encode_jpeg(np.zeros((8, 16, 3), np.uint8)),
@@ -28,7 +28,7 @@ PLANTED = {
     "ogg": mc.encode_ogg_vorbis_meta(8000, 1, 16000),
     "mp4": mc.encode_mp4_meta(6, 4, 1000),
 }
-FORMATS = {name: kind for _, _, _, name, kind in mm._MAGIC_CHAIN}
+FORMATS = {name: f.kind for name, f in mc.FORMATS.items()}
 KINDS = ("image", "audio", "video")
 
 
@@ -36,10 +36,6 @@ def test_every_chain_format_is_planted_and_sniffed():
     assert set(PLANTED) == set(FORMATS)
     for fmt, payload in PLANTED.items():
         assert mm._sniff_one(payload) == fmt
-    # every real kernel is keyed by a format the chain can sniff
-    assert set(mm._FEATURES) <= set(FORMATS)
-    assert set(mm._RESIZES) <= set(FORMATS)
-    assert set(mm._BUILTIN_SAMPLERS) <= set(FORMATS)
 
 
 @pytest.mark.parametrize("kind", KINDS)
@@ -47,8 +43,8 @@ def test_every_chain_format_is_planted_and_sniffed():
 def test_decode_gets_real_kernel_only_for_matching_kind(fmt, kind):
     payload = PLANTED[fmt]
     got = mm._real_decode(kind)(payload)
-    if FORMATS[fmt] == kind and fmt in mm._FEATURES:
-        assert got == mm._FEATURES[fmt](payload)
+    if FORMATS[fmt] == kind and mc.FORMATS[fmt].features:
+        assert got == mc.FORMATS[fmt].features(payload)
         assert got != mm._fake_decode(payload)
     else:
         assert got == mm._fake_decode(payload)
@@ -59,8 +55,8 @@ def test_decode_gets_real_kernel_only_for_matching_kind(fmt, kind):
 def test_resize_gets_real_kernel_only_for_matching_kind(fmt, kind):
     payload = PLANTED[fmt]
     got = mm._default_resize(kind, payload, 3, 2)
-    if FORMATS[fmt] == kind and fmt in mm._RESIZES:
-        assert got == mm._RESIZES[fmt](payload, 3, 2)
+    if FORMATS[fmt] == kind and mc.FORMATS[fmt].resize:
+        assert got == mc.FORMATS[fmt].resize(payload, 3, 2)
         assert mm._sniff_one(got) == fmt  # re-encoded, not byte-resampled
     else:
         assert got == mm._fake_resize(payload, 3, 2)
