@@ -360,7 +360,12 @@ class CheckpointedRunner:
         this invocation AFTER its data files are fully written but
         BEFORE the manifest pointer moves — the window the atomic
         commit protects. Returns chunk ids committed in this
-        invocation."""
+        invocation.
+
+        `transform` is called once per pending chunk, on that chunk's
+        rows, and only after the previous chunk has committed: a
+        transform may read `result()` to see every earlier chunk
+        (`training.dedup.incremental_dedup` dedups against it)."""
         chunked = with_chunk(df, self.n_chunks)
         done = self.committed_chunks()
         committed: list[int] = []

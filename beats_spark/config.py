@@ -169,7 +169,7 @@ def read_input(spark, input_cfg: dict[str, Any]):
     (filebeat/input/log/config.go)."""
     from pyspark.sql import functions as F
 
-    from beats_spark.fields import put_field
+    from beats_spark.fields import put_fields
     from beats_spark.readers.lines import read_lines
     from beats_spark.readers.multiline import merge_lines
     from beats_spark.readers.ndjson import parse_container, parse_ndjson
@@ -250,8 +250,9 @@ def read_input(spark, input_cfg: dict[str, Any]):
             )
     fields = input_cfg.get("fields") or {}
     under_root = bool(input_cfg.get("fields_under_root", False))
-    for k, v in fields.items():
-        df = put_field(df, k if under_root else f"fields.{k}", F.lit(v))
+    df = put_fields(
+        df, {(k if under_root else f"fields.{k}"): F.lit(v) for k, v in fields.items()}
+    )
     tags = input_cfg.get("tags") or []
     if tags:
         from beats_spark.processors.shape import AddTags

@@ -10,7 +10,10 @@ or (b) a NULL at run time (e.g. an enrich miss). Both must behave as
 
 Reserved namespaces (`event.go:67-82`): `@timestamp` is a plain
 timestamp column; `@metadata.*` lives in the `_meta` struct column and
-is dropped before any sink write (sinks/writer.py).
+is dropped before any sink write (`sinks.strip_internal`).
+
+Every read, write and delete resolves its path with `_resolve`, and
+every write goes through `put_fields`.
 """
 
 from __future__ import annotations
@@ -22,6 +25,22 @@ from pyspark.sql import types as T
 META_COL = "_meta"  # @metadata analog: routing-only, never emitted
 ERROR_COL = "_error"  # error.message analog (event.go:303-316)
 FLAGS_COL = "_flags"  # log.flags analog (beat.FlagField), array<string>
+
+
+def _resolve(schema: T.StructType, path: str) -> tuple[str, list[str]]:
+    """The one dotted-path rule: `path` → (top-level column, struct path
+    under it). `@metadata.x` lives in `_meta`; otherwise the longest
+    top-level name the path starts with wins (names may hold dots:
+    `source.ip`, `log.file`); with none, the first segment."""
+    if path.startswith("@metadata."):
+        return META_COL, path[len("@metadata.") :].split(".")
+    parts = path.split(".")
+    names = set(schema.fieldNames())
+    for cut in range(len(parts), 0, -1):
+        top = ".".join(parts[:cut])
+        if top in names:
+            return top, parts[cut:]
+    return parts[0], parts[1:]
 
 
 def _navigate(dtype: T.DataType, parts: list[str]) -> T.DataType | None:
@@ -39,17 +58,8 @@ def _navigate(dtype: T.DataType, parts: list[str]) -> T.DataType | None:
 
 def field_type(schema: T.StructType, path: str) -> T.DataType | None:
     """Data type at `path`, or None when the schema lacks it."""
-    if path.startswith("@metadata."):
-        path = META_COL + path[len("@metadata") :]
-    if path == "@timestamp":
-        path = "@timestamp"
-    parts = path.split(".")
-    # longest-prefix match on top-level names that contain dots
-    for cut in range(len(parts), 0, -1):
-        top = ".".join(parts[:cut])
-        if top in schema.fieldNames():
-            return _navigate(schema[top].dataType, parts[cut:])
-    return None
+    top, rest = _resolve(schema, path)
+    return _navigate(schema, [top, *rest])
 
 
 def has_field(schema: T.StructType, path: str) -> bool:
@@ -57,74 +67,26 @@ def has_field(schema: T.StructType, path: str) -> bool:
 
 
 def field_col(df: DataFrame, path: str) -> Column | None:
-    """Column for a dotted path, or None when absent from the schema."""
-    if path.startswith("@metadata."):
-        path = META_COL + path[len("@metadata") :]
-    parts = path.split(".")
-    for cut in range(len(parts), 0, -1):
-        top = ".".join(parts[:cut])
-        if top in df.columns:
-            if field_type(df.schema, path) is None:
-                return None
-            col = F.col(f"`{top}`")
-            for p in parts[cut:]:
-                col = col.getField(p)
-            return col
-    return None
+    """GetValue analog (`event.go:84-104`): the column at a dotted path,
+    or None when absent from the schema."""
+    top, rest = _resolve(df.schema, path)
+    if _navigate(df.schema, [top, *rest]) is None:
+        return None
+    col = F.col(f"`{top}`")
+    for p in rest:
+        col = col.getField(p)
+    return col
 
 
-def _put_nested(
-    col: Column | None, dtype: T.DataType | None, parts: list[str], value: Column
-) -> Column:
-    """Set `parts` under struct `col` (None = absent), creating missing
-    intermediate structs (withField can't create them itself)."""
-    p = parts[0]
-    is_struct = isinstance(dtype, T.StructType)
-    if len(parts) == 1:
-        inner = value
-    else:
-        sub_dt = (
-            dtype[p].dataType if is_struct and p in dtype.fieldNames() else None
-        )
-        sub_col = (
-            col.getField(p)
-            if col is not None and is_struct and p in dtype.fieldNames()
-            else None
-        )
-        if not isinstance(sub_dt, T.StructType):
-            sub_col, sub_dt = None, None  # overwrite non-struct intermediary
-        inner = _put_nested(sub_col, sub_dt, parts[1:], value)
-    if col is None or not is_struct:
-        return F.struct(inner.alias(p))
-    return col.withField(f"`{p}`", inner)
-
-
-def put_field(df: DataFrame, path: str, value: Column) -> DataFrame:
-    """PutValue analog (`event.go:240-253`): create or overwrite; nested
-    paths go through struct columns, creating intermediates as needed.
-    A non-struct intermediary is overwritten with a struct (Beats would
-    error TryToExpandObject — documented divergence)."""
-    if path.startswith("@metadata."):
-        path = META_COL + path[len("@metadata") :]
-    parts = path.split(".")
-    if len(parts) == 1 or ".".join(parts) in df.columns:
-        return df.withColumn(path, value)
-    top = parts[0]
-    if top in df.columns:
-        dt = df.schema[top].dataType
-        col = F.col(f"`{top}`") if isinstance(dt, T.StructType) else None
-        return df.withColumn(top, _put_nested(col, dt, parts[1:], value))
-    return df.withColumn(top, _put_nested(None, None, parts[1:], value))
-
-
-def _path_tree(paths: dict[str, Column]) -> dict:
-    """{'a.b': v, 'a.c.d': w} → {'a': {'b': v, 'c': {'d': w}}}. A path
-    that is both leaf and prefix keeps the later entry (put_field's
-    overwrite-non-struct-intermediary divergence, applied in order)."""
+def _path_tree(schema: T.StructType, paths: dict) -> dict:
+    """{'a.b': v, 'a.c.d': w} → {'a': {'b': v, 'c': {'d': w}}}, keyed by
+    resolved top-level column. Where one path is a prefix of another
+    the later entry wins, as sequential writes would."""
     root: dict = {}
     for path, v in paths.items():
+        top, rest = _resolve(schema, path)
+        parts = [top, *rest]
         node = root
-        parts = path.split(".")
         for p in parts[:-1]:
             if not isinstance(node.get(p), dict):
                 node[p] = {}
@@ -133,65 +95,52 @@ def _path_tree(paths: dict[str, Column]) -> dict:
     return root
 
 
-def _merge_nested(col: Column | None, dtype, tree: dict) -> Column:
-    """Rebuild a struct with `tree`'s values merged in — every existing
-    field referenced exactly ONCE (getField), so the expression stays
-    LINEAR in total field count. A withField chain (one put_field per
-    path) makes each deep write re-reference the whole prior chain:
-    with ~30 nested writes per grok stage the optimizer chews minutes
-    on the re-inlined tree (haproxy module lesson — 144s optimizer
-    pass collapsed to <2s by this merge)."""
+def _merge_nested(col: Column, dtype: T.DataType | None, tree: dict) -> Column:
+    """Rebuild struct `col` (of type `dtype`; not a struct = absent) with
+    `tree`'s values merged in — every existing field referenced exactly
+    ONCE (getField), so the expression stays LINEAR in total field
+    count. A withField chain (one write per path) makes each deep write
+    re-reference the whole prior chain: with ~30 nested writes per grok
+    stage the optimizer chews minutes on the re-inlined tree (haproxy
+    module lesson — 144s optimizer pass collapsed to <2s by this
+    merge). A NULL struct comes back as a struct of its NULL fields
+    plus the new values."""
+    names = dtype.fieldNames() if isinstance(dtype, T.StructType) else []
     out = []
-    is_struct = isinstance(dtype, T.StructType)
-    existing = dtype.fieldNames() if is_struct else []
-    tree = dict(tree)
-    for n in existing:
-        if n in tree:
-            node = tree.pop(n)
-            if isinstance(node, dict):
-                sub_dt = dtype[n].dataType
-                if isinstance(sub_dt, T.StructType):
-                    out.append(
-                        _merge_nested(col.getField(n), sub_dt, node).alias(n)
-                    )
-                else:
-                    out.append(_merge_nested(None, None, node).alias(n))
-            else:
-                out.append(node.alias(n))
-        else:
-            out.append(col.getField(n).alias(n))
-    for n, node in tree.items():
-        out.append(
-            (_merge_nested(None, None, node) if isinstance(node, dict) else node)
-            .alias(n)
-        )
+    for n in names + [n for n in tree if n not in names]:
+        node = tree.get(n)
+        if isinstance(node, dict):
+            sub = dtype[n].dataType if n in names else None
+            node = _merge_nested(col.getField(n), sub, node)
+        elif node is None:
+            node = col.getField(n)
+        out.append(node.alias(n))
     return F.struct(*out)
 
 
 def put_fields(df: DataFrame, values: dict[str, Column]) -> DataFrame:
-    """Batch put_field: write MANY dotted paths in one projection, each
-    top-level struct rebuilt once. Semantics match sequential put_field
-    calls (create-or-overwrite, intermediates created, non-struct
-    intermediaries overwritten) as long as no path is a prefix of
-    another top-level column write."""
-    flat: dict[str, Column] = {}
-    nested: dict[str, dict[str, Column]] = {}
-    for path, v in values.items():
-        if path.startswith("@metadata."):
-            path = META_COL + path[len("@metadata") :]
-        parts = path.split(".")
-        if len(parts) == 1 or path in df.columns:
-            flat[path] = v
-        else:
-            nested.setdefault(parts[0], {})[".".join(parts[1:])] = v
-    out: dict[str, Column] = dict(flat)
-    for top, sub in nested.items():
-        dt = df.schema[top].dataType if top in df.columns else None
-        if isinstance(dt, T.StructType):
-            out[top] = _merge_nested(F.col(f"`{top}`"), dt, _path_tree(sub))
-        else:
-            out[top] = _merge_nested(None, None, _path_tree(sub))
+    """PutValue analog (`event.go:240-253`) and the only field writer:
+    create or overwrite every dotted path in `values` in ONE projection,
+    each top-level struct rebuilt once. Missing or NULL intermediate
+    structs are created; a non-struct intermediary is overwritten with
+    a struct (Beats would error TryToExpandObject — documented
+    divergence). Every value is computed from `df` as it was before
+    the batch, so a write that reads an earlier one's target needs a
+    call of its own."""
+    out: dict[str, Column] = {}
+    for top, node in _path_tree(df.schema, values).items():
+        if isinstance(node, dict):
+            node = _merge_nested(F.col(f"`{top}`"), _navigate(df.schema, [top]), node)
+        out[top] = node
     return df.withColumns(out)
+
+
+def _prune(col: Column, node) -> Column:
+    """`col` cut down to the leaves of a `_path_tree` (True keeps the
+    whole value)."""
+    if node is True:
+        return col
+    return F.struct(*[_prune(col.getField(n), sub).alias(n) for n, sub in node.items()])
 
 
 def materialize(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
@@ -212,16 +161,16 @@ def materialize(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
 
 def drop_field(df: DataFrame, path: str) -> DataFrame:
     """Delete analog (`event.go:268-276`); no-op when absent."""
-    if not has_field(df.schema, path):
+    top, rest = _resolve(df.schema, path)
+    if _navigate(df.schema, [top, *rest]) is None:
         return df
-    parts = path.split(".")
-    if path in df.columns or len(parts) == 1:
-        return df.drop(path)
-    top = parts[0]
-    if top in df.columns and isinstance(df.schema[top].dataType, T.StructType):
-        col = F.col(f"`{top}`").dropFields("`" + "`.`".join(parts[1:]) + "`")
-        return df.withColumn(top, col)
-    return df
+    # dropFields cannot empty a struct, and Parquet cannot store one
+    # (Beats keeps `{}`): a struct whose only field goes is deleted too
+    while rest and len(_navigate(df.schema, [top, *rest[:-1]]).fieldNames()) == 1:
+        rest = rest[:-1]
+    if not rest:
+        return df.drop(top)
+    return df.withColumn(top, F.col(f"`{top}`").dropFields("`" + "`.`".join(rest) + "`"))
 
 
 def ensure_flags(df: DataFrame) -> DataFrame:

@@ -386,7 +386,7 @@ class Grok(Processor):
                 # matches and on_failure only sets component)
                 v = F.coalesce(v, cur)
             writes[prefix + k] = v
-        # one batched projection: per-put_field withField chains make
+        # one batched projection: per-path withField chains make
         # the optimizer re-inline quadratically (see fields.put_fields)
         df = put_fields(df, writes)
         failed = ~matched_any

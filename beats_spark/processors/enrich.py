@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from beats_spark.conditions import _ipv4_to_long
-from beats_spark.fields import field_col, field_type, put_field
+from beats_spark.fields import field_col, field_type, put_fields
 from beats_spark.processors.base import Processor, register
 from beats_spark.processors.shape import _set_error
 
@@ -74,10 +74,8 @@ class Lookup(Processor):
             ev_key == F.col("__lk__"),
             "left",
         ).drop("__lk__")
-        for c in fields:
-            joined = put_field(joined, prefix + c, F.col(f"__lv_{c}__"))
-            joined = joined.drop(f"__lv_{c}__")
-        return joined
+        joined = put_fields(joined, {prefix + c: F.col(f"__lv_{c}__") for c in fields})
+        return joined.drop(*[f"__lv_{c}__" for c in fields])
 
 
 def _inline_dimension(
@@ -139,12 +137,13 @@ class AddHostMetadata(Processor):
             if tags is None
             else ~F.coalesce(F.array_contains(tags, "forwarded"), F.lit(False))
         )
+        writes = {}
         for k, v in info.items():
             path = f"host.{k}"
             existing = field_col(df, path)
             keep = existing if existing is not None else F.lit(None).cast("string")
-            df = put_field(df, path, F.when(not_forwarded, F.lit(v)).otherwise(keep))
-        return df
+            writes[path] = F.when(not_forwarded, F.lit(v)).otherwise(keep)
+        return put_fields(df, writes)
 
 
 @register
@@ -154,9 +153,9 @@ class AddAgentMetadata(Processor):
     name = "add_agent_metadata"
 
     def apply(self, df: DataFrame) -> DataFrame:
-        df = put_field(df, "agent.type", F.lit("beats_spark"))
-        df = put_field(df, "agent.version", F.lit("1.0.0"))
-        return df
+        return put_fields(
+            df, {"agent.type": F.lit("beats_spark"), "agent.version": F.lit("1.0.0")}
+        )
 
 
 @register
@@ -168,9 +167,13 @@ class AddObserverMetadata(Processor):
     def apply(self, df: DataFrame) -> DataFrame:
         import socket
 
-        df = put_field(df, "observer.hostname", F.lit(socket.gethostname()))
-        df = put_field(df, "observer.type", F.lit("beats_spark"))
-        return df
+        return put_fields(
+            df,
+            {
+                "observer.hostname": F.lit(socket.gethostname()),
+                "observer.type": F.lit("beats_spark"),
+            },
+        )
 
 
 _FP_METHODS = {"md5", "sha1", "sha256", "sha384", "sha512", "xxhash"}
@@ -236,7 +239,7 @@ class Fingerprint(Processor):
         else:
             raise ValueError(f"fingerprint: unknown encoding {encoding}")
         df = _set_error(df, missing, "fingerprint: missing field")
-        return put_field(df, target, F.when(~missing, out))
+        return put_fields(df, {target: F.when(~missing, out)})
 
 
 def _b32_of_hex_udf():
@@ -338,7 +341,7 @@ class CommunityId(Processor):
         icmp_c = field_col(df, self.cfg.get("icmp_code", "icmp.code"))
         target = self.cfg.get("target", "network.community_id")
         if src is None or dst is None or (proto is None and iana is None):
-            return put_field(df, target, F.lit(None).cast("string"))
+            return put_fields(df, {target: F.lit(None).cast("string")})
         seed = int(self.cfg.get("seed", 0))
 
         def resolve_proto(c: Column) -> Column:
@@ -432,7 +435,7 @@ class CommunityId(Processor):
             & proto_num.isNotNull()
             & (~is_ports | F.coalesce(ports_ok, F.lit(False)))
         )
-        return put_field(df, target, F.when(ok, cid))
+        return put_fields(df, {target: F.when(ok, cid)})
 
 
 @register
@@ -475,7 +478,7 @@ class AddNetworkDirection(Processor):
             .otherwise("external")
         )
         both = src.isNotNull() & dst.isNotNull()
-        return put_field(df, target, F.when(both, direction))
+        return put_fields(df, {target: F.when(both, direction)})
 
 
 # minimal embedded public-suffix slice (registered_domain.go uses the
@@ -518,7 +521,7 @@ class RegisteredDomain(Processor):
             )
             deep_enough = F.size(F.split(host, r"\.")) > nlab
             out = F.when(is_match & deep_enough, reg).otherwise(out)
-        return put_field(df, target, out)
+        return put_fields(df, {target: out})
 
 
 @register
@@ -553,8 +556,8 @@ class Cache(Processor):
             .orderBy(ocol)
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        return put_field(
-            df, self.cfg["target_field"], F.last(stored, ignorenulls=True).over(w)
+        return put_fields(
+            df, {self.cfg["target_field"]: F.last(stored, ignorenulls=True).over(w)}
         )
 
 
@@ -583,7 +586,7 @@ class Dns(Processor):
             )
             tmp = lk.apply(out)
             ans = field_col(tmp, self.cfg.get("answer_field", "answer"))
-            out = put_field(tmp, dst, ans)
+            out = put_fields(tmp, {dst: ans})
             if self.cfg.get("answer_field", "answer") != dst:
                 out = out.drop(self.cfg.get("answer_field", "answer"))
         return out
@@ -601,6 +604,6 @@ class Timeseries(Processor):
         cols = [c for c in (field_col(df, d) for d in dims) if c is not None]
         if not cols:
             return df
-        return put_field(
-            df, "timeseries.instance", F.xxhash64(*cols).cast("string")
+        return put_fields(
+            df, {"timeseries.instance": F.xxhash64(*cols).cast("string")}
         )

@@ -27,7 +27,6 @@ from beats_spark.fields import (
     field_col,
     field_type,
     materialize,
-    put_field,
     put_fields,
 )
 from beats_spark.processors.base import Processor, register
@@ -72,7 +71,7 @@ class Dissect(Processor):
             # every key in ONE batched projection of array reads: a
             # Filter on a key (drop_event) stays above the Generate, so
             # the plan evaluates the pattern once per row; a per-key
-            # put_field chain cannot re-inline quadratically; and an
+            # withField chain cannot re-inline quadratically; and an
             # in-place overwrite of the source field (target_prefix "")
             # cannot poison later keys or the failure flag (same fix as
             # Grok / put_fields)
@@ -159,14 +158,15 @@ class DecodeJsonFields(Processor):
                 df = df.withColumn(tmp, parsed)
                 ptype = df.schema[tmp].dataType
                 if isinstance(ptype, T.StructType):
-                    for sub in ptype.fieldNames():
-                        df = put_field(df, sub, F.col(tmp).getField(sub))
+                    df = put_fields(
+                        df, {sub: F.col(tmp).getField(sub) for sub in ptype.fieldNames()}
+                    )
                 df = df.drop(tmp)
             else:
-                df = put_field(df, dest, parsed)
+                df = put_fields(df, {dest: parsed})
             if self.cfg.get("document_id"):
                 doc = F.get_json_object(col, "$." + self.cfg["document_id"])
-                df = put_field(df, "@metadata._id", doc)
+                df = put_fields(df, {"@metadata._id": doc})
             if self.cfg.get("add_error_key", False):
                 df = _set_error(
                     df, col.isNotNull() & parsed.isNull(), "decode_json_fields: parse error"
@@ -208,7 +208,7 @@ class DecodeCsvFields(Processor):
                     ),
                 ).otherwise(x),
             )
-            df = put_field(df, dst, unq)
+            df = put_fields(df, {dst: unq})
         return df
 
 
@@ -227,7 +227,8 @@ class DecodeBase64Field(Processor):
             ):
                 return _set_error(df, F.lit(True), "decode_base64_field: missing field")
             return df
-        return put_field(df, spec.get("to", spec["from"]), F.unbase64(col).cast("string"))
+        decoded = F.unbase64(col).cast("string")
+        return put_fields(df, {spec.get("to", spec["from"]): decoded})
 
 
 @register
@@ -264,7 +265,7 @@ class DecompressGzipField(Processor):
         col = field_col(df, spec.get("from", ""))
         if col is None:
             return df
-        return put_field(df, spec.get("to", spec["from"]), udf(col.cast("binary")))
+        return put_fields(df, {spec.get("to", spec["from"]): udf(col.cast("binary"))})
 
 
 @register
@@ -295,25 +296,21 @@ class DecodeXml(Processor):
             )
         parsed = F.from_xml(col, ddl)
         target = self.cfg.get("target_field", field)
-        df = put_field(df, target, parsed)
+        df = put_fields(df, {target: parsed})
         if not self.cfg.get("ignore_failure", False):
             # PERMISSIVE mode yields an all-null struct on bad input;
             # flag when nothing parsed out of a non-null source
             # (approximation: a valid doc matching zero schema fields
             # also flags — documented divergence)
-            ptype = df.schema[target.split(".")[0]].dataType
-            tcol = field_col(df, target)
-            if isinstance(ptype, T.StructType) and tcol is not None:
-                import pyspark.sql.types as _T
-
-                inner = field_type(df.schema, target)
-                if isinstance(inner, _T.StructType):
-                    all_null = F.lit(True)
-                    for fname in inner.fieldNames():
-                        all_null = all_null & tcol.getField(fname).isNull()
-                    df = _set_error(
-                        df, col.isNotNull() & all_null, "decode_xml: parse error"
-                    )
+            inner = field_type(df.schema, target)
+            if isinstance(inner, T.StructType):
+                tcol = field_col(df, target)
+                all_null = F.lit(True)
+                for fname in inner.fieldNames():
+                    all_null = all_null & tcol.getField(fname).isNull()
+                df = _set_error(
+                    df, col.isNotNull() & all_null, "decode_xml: parse error"
+                )
         return df
 
 
@@ -329,7 +326,7 @@ class UrlDecode(Processor):
             if col is None:
                 continue
             decoded = F.url_decode(F.regexp_replace(col, r"\+", "%20"))
-            df = put_field(df, spec.get("to", spec["from"]), decoded)
+            df = put_fields(df, {spec.get("to", spec["from"]): decoded})
         return df
 
 
@@ -392,7 +389,7 @@ class KV(Processor):
         if prefix:
             m = F.transform_keys(m, lambda k, v: F.concat(F.lit(prefix), k))
         out = F.when(src.isNotNull(), m)
-        return put_field(df, cfg.get("target_field", cfg["field"]), out)
+        return put_fields(df, {cfg.get("target_field", cfg["field"]): out})
 
 
 @register
@@ -418,7 +415,7 @@ class DecodeDuration(Processor):
         div = {"milliseconds": 1e-3, "seconds": 1.0, "minutes": 60.0, "hours": 3600.0}[fmt]
         out = F.when(col.rlike(r"^-?(\d+(\.\d+)?(ns|us|µs|ms|s|m|h))+$"), secs / F.lit(div))
         sign = F.when(col.startswith("-"), F.lit(-1.0)).otherwise(F.lit(1.0))
-        return put_field(df, self.cfg["field"], out * sign)
+        return put_fields(df, {self.cfg["field"]: out * sign})
 
 
 # Go reference layouts → Spark datetime patterns for the timestamp
@@ -506,7 +503,7 @@ class Timestamp(Processor):
             df = _set_error(
                 df, col.isNotNull() & parsed_all.isNull(), "timestamp: parse failure"
             )
-        return put_field(df, target, parsed_all)
+        return put_fields(df, {target: parsed_all})
 
 
 _CONVERT_TYPES = {
@@ -560,7 +557,7 @@ class Convert(Processor):
                     df, col.isNotNull() & out.isNull(), f"convert: unable to convert {spec['from']}"
                 )
             to = spec.get("to", spec["from"])
-            df = put_field(df, to, out)
+            df = put_fields(df, {to: out})
             if mode == "rename" and to != spec["from"]:
                 df = drop_field(df, spec["from"])
         return df

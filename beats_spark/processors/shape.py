@@ -13,12 +13,14 @@ from pyspark.sql import types as T
 
 from beats_spark.fields import (
     FLAGS_COL,
+    _path_tree,
+    _prune,
     add_flag,
     drop_field,
     field_col,
     field_type,
     has_field,
-    put_field,
+    put_fields,
 )
 from beats_spark.processors.base import Processor, is_internal, register
 
@@ -71,28 +73,15 @@ class IncludeFields(Processor):
     name = "include_fields"
 
     def apply(self, df: DataFrame) -> DataFrame:
-        want = list(self.cfg.get("fields", []))
-        keep, struct_keeps = [], {}
-        for c in df.columns:
-            if is_internal(c) or c in self.PRESERVE:
-                keep.append(c)
-        for w in want:
-            if w in df.columns:
-                if w not in keep:
-                    keep.append(w)
-            elif "." in w:
-                top = w.split(".")[0]
-                struct_keeps.setdefault(top, []).append(w.split(".", 1)[1])
+        want = [w for w in self.cfg.get("fields", []) if has_field(df.schema, w)]
+        # a path under another listed path adds nothing: the whole stays
+        want = [w for w in want if not any(w.startswith(o + ".") for o in want)]
+        keep = [c for c in df.columns if is_internal(c) or c in self.PRESERVE]
         cols = [F.col(f"`{c}`") for c in keep]
-        for top, subs in struct_keeps.items():
-            if top in df.columns and isinstance(df.schema[top].dataType, T.StructType):
-                fields = [
-                    F.col(f"`{top}`").getField(s).alias(s)
-                    for s in subs
-                    if has_field(df.schema, f"{top}.{s}")
-                ]
-                if fields:
-                    cols.append(F.struct(*fields).alias(top))
+        for top, node in _path_tree(df.schema, dict.fromkeys(want, True)).items():
+            if top not in keep:
+                col = F.col(f"`{top}`")
+                cols.append(col if node is True else _prune(col, node).alias(top))
         return df.select(*cols)
 
     PRESERVE = {"@timestamp", "type"}
@@ -109,6 +98,7 @@ class AddFields(Processor):
     def apply(self, df: DataFrame) -> DataFrame:
         target = self.cfg.get("target", "fields")
         overwrite = bool(self.cfg.get("overwrite", True))
+        writes = {}
         for k, v in (self.cfg.get("fields") or {}).items():
             path = f"{target}.{k}" if target else k
             val = F.lit(v)
@@ -116,8 +106,8 @@ class AddFields(Processor):
                 existing = field_col(df, path)
                 if existing is not None:
                     val = F.coalesce(existing, val)
-            df = put_field(df, path, val)
-        return df
+            writes[path] = val
+        return put_fields(df, writes)
 
 
 @register
@@ -140,9 +130,7 @@ class AddLabels(Processor):
 
         flat: dict = {}
         flatten("", self.cfg.get("labels") or {}, flat)
-        for k, v in flat.items():
-            df = put_field(df, f"labels.{k}", F.lit(v))
-        return df
+        return put_fields(df, {f"labels.{k}": F.lit(v) for k, v in flat.items()})
 
 
 @register
@@ -161,7 +149,7 @@ class AddTags(Processor):
             if existing is not None
             else F.array().cast("array<string>")
         )
-        return put_field(df, target, F.array_union(base, F.array(*tags)))
+        return put_fields(df, {target: F.array_union(base, F.array(*tags))})
 
 
 @register
@@ -182,7 +170,7 @@ class CopyFields(Processor):
                         df, F.lit(True), f"copy_fields: missing {pair['from']}"
                     )
                 continue
-            df = put_field(df, pair["to"], src)
+            df = put_fields(df, {pair["to"]: src})
         return df
 
 
@@ -201,7 +189,7 @@ class Rename(Processor):
                 ):
                     df = _set_error(df, F.lit(True), f"rename: missing {pair['from']}")
                 continue
-            df = put_field(df, pair["to"], src)
+            df = put_fields(df, {pair["to"]: src})
             df = drop_field(df, pair["from"])
         return df
 
@@ -223,7 +211,8 @@ class MoveFields(Processor):
                     df = _set_error(df, F.lit(True), f"move_fields: missing {f}")
                 continue
             leaf = f.split(".")[-1]
-            df = put_field(df, f"{to}{leaf}" if to.endswith(".") or not to else f"{to}.{leaf}", src)
+            dest = f"{to}{leaf}" if to.endswith(".") or not to else f"{to}.{leaf}"
+            df = put_fields(df, {dest: src})
             df = drop_field(df, f)
         return df
 
@@ -258,7 +247,7 @@ class TruncateFields(Processor):
                 new = F.when(trunc_cond, sliced.cast("string")).otherwise(col)
             # flag BEFORE overwriting: the condition reads the original value
             df = add_flag(df, "truncated", trunc_cond)
-            df = put_field(df, f, new)
+            df = put_fields(df, {f: new})
         return df
 
 
@@ -279,11 +268,8 @@ class Replace(Processor):
                         df, F.lit(True), f"replace: missing {item['field']}"
                     )
                 continue
-            df = put_field(
-                df,
-                item["field"],
-                F.regexp_replace(col, item["pattern"], item["replacement"]),
-            )
+            new = F.regexp_replace(col, item["pattern"], item["replacement"])
+            df = put_fields(df, {item["field"]: new})
         return df
 
 
@@ -306,7 +292,7 @@ class _AlterCase(Processor):
         for f in values:
             col = field_col(df, f)
             if col is not None and isinstance(field_type(df.schema, f), T.StringType):
-                df = put_field(df, f, self.fn(col))
+                df = put_fields(df, {f: self.fn(col)})
         return df
 
 
@@ -362,7 +348,7 @@ class Append(Processor):
             out = F.concat(out, F.coalesce(p, F.array().cast("array<string>")))
         if not self.cfg.get("allow_duplicate", True):
             out = F.array_distinct(out)
-        return put_field(df, target, out)
+        return put_fields(df, {target: out})
 
 
 @register
@@ -381,7 +367,7 @@ class ExtractField(Processor):
         parts = F.split(col, _re.escape(self.cfg["separator"]))
         idx = int(self.cfg["index"])
         val = parts.getItem(idx)
-        df = put_field(df, self.cfg["target"], val)
+        df = put_fields(df, {self.cfg["target"]: val})
         return _set_error(
             df, F.size(parts) <= idx, "extract_field: index out of range"
         )
@@ -400,9 +386,10 @@ class ExtractArray(Processor):
             if self.cfg.get("ignore_missing", False):
                 return df
             return _set_error(df, F.lit(True), f"extract_array: missing {self.cfg['field']}")
-        for target, pos in (self.cfg.get("mappings") or {}).items():
-            df = put_field(df, target, F.element_at(col, int(pos) + 1))
-        return df
+        mappings = self.cfg.get("mappings") or {}
+        return put_fields(
+            df, {t: F.element_at(col, int(pos) + 1) for t, pos in mappings.items()}
+        )
 
 
 @register
@@ -447,7 +434,7 @@ class DetectMimeType(Processor):
                 m = s.startswith(sig)
             expr = F.when(m, F.lit(mime)).otherwise(expr)
         expr = F.when(b.isNull() | (F.length(b) == 0), F.lit(None)).otherwise(expr)
-        return put_field(df, self.cfg["target"], expr)
+        return put_fields(df, {self.cfg["target"]: expr})
 
 
 @register
@@ -459,7 +446,7 @@ class AddId(Processor):
 
     def apply(self, df: DataFrame) -> DataFrame:
         target = self.cfg.get("target_field", "@metadata._id")
-        return put_field(df, target, F.expr("uuid()"))
+        return put_fields(df, {target: F.expr("uuid()")})
 
 
 @register
@@ -470,7 +457,7 @@ class AddLocale(Processor):
 
     def apply(self, df: DataFrame) -> DataFrame:
         tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-        return put_field(df, "event.timezone", F.lit(tz))
+        return put_fields(df, {"event.timezone": F.lit(tz)})
 
 
 @register
@@ -480,7 +467,7 @@ class Now(Processor):
     name = "now"
 
     def apply(self, df: DataFrame) -> DataFrame:
-        return put_field(df, self.cfg.get("field", "now"), F.current_timestamp())
+        return put_fields(df, {self.cfg.get("field", "now"): F.current_timestamp()})
 
 
 @register
@@ -493,7 +480,8 @@ class AddFormattedIndex(Processor):
     def apply(self, df: DataFrame) -> DataFrame:
         from beats_spark.routing import format_string_col
 
-        return put_field(df, "@metadata.raw_index", format_string_col(df, self.cfg["index"]))
+        index = format_string_col(df, self.cfg["index"])
+        return put_fields(df, {"@metadata.raw_index": index})
 
 
 @register
@@ -508,7 +496,12 @@ class AddDataStream(Processor):
         typ = ds.get("type", "logs")
         dataset = ds.get("dataset", "generic")
         ns = ds.get("namespace", "default")
-        df = put_field(df, "data_stream.type", F.lit(typ))
-        df = put_field(df, "data_stream.dataset", F.lit(dataset))
-        df = put_field(df, "data_stream.namespace", F.lit(ns))
-        return put_field(df, "@metadata.raw_index", F.lit(f"{typ}-{dataset}-{ns}"))
+        return put_fields(
+            df,
+            {
+                "data_stream.type": F.lit(typ),
+                "data_stream.dataset": F.lit(dataset),
+                "data_stream.namespace": F.lit(ns),
+                "@metadata.raw_index": F.lit(f"{typ}-{dataset}-{ns}"),
+            },
+        )

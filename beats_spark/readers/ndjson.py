@@ -17,7 +17,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.fields import put_field
+from beats_spark.fields import put_fields
 from beats_spark.processors.shape import _set_error
 
 
@@ -36,17 +36,16 @@ def parse_ndjson(
     tmp = "__nd__"
     df = df.withColumn(tmp, parsed)
     ptype = df.schema[tmp].dataType
-    for sub in ptype.fieldNames():  # type: ignore[union-attr]
-        df = put_field(df, sub, F.col(tmp).getField(sub))
+    subs = ptype.fieldNames()  # type: ignore[union-attr]
+    df = put_fields(df, {sub: F.col(tmp).getField(sub) for sub in subs})
     if cfg.get("add_error_key", True):
         # from_json PERMISSIVE yields a struct of NULLs on bad input;
         # detect true parse failure via get_json_object on the root
         bad = line.isNotNull() & F.get_json_object(line, "$").isNull()
         df = _set_error(df, bad, "ndjson: json parse error")
     if cfg.get("document_id"):
-        df = put_field(
-            df, "@metadata._id", F.get_json_object(line, "$." + cfg["document_id"])
-        )
+        doc = F.get_json_object(line, "$." + cfg["document_id"])
+        df = put_fields(df, {"@metadata._id": doc})
     if not cfg.get("keep_original", False):
         df = df.drop(line_col)
     return df.drop(tmp)
@@ -82,8 +81,9 @@ def parse_container(
     )
     # derive stream/time BEFORE replacing the line column — the
     # expressions reference it by name
-    df = put_field(df, "stream", out_stream)
-    df = put_field(df, "@timestamp", F.try_to_timestamp(out_time))
+    df = put_fields(
+        df, {"stream": out_stream, "@timestamp": F.try_to_timestamp(out_time)}
+    )
     df = df.withColumn(line_col, out_msg)
     if stream != "all":
         df = df.filter(F.col("stream") == stream)

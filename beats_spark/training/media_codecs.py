@@ -4335,7 +4335,8 @@ def encode_wav_g711(
 ) -> bytes:
     """int16 interleaved samples → RIFF/WAVE with G.711 data (fmt tag
     7 = mu-law, 6 = A-law, 8 bits/sample) plus the fact chunk non-PCM
-    formats require (frame count)."""
+    formats require (frame count). Odd-length data gets the RIFF pad
+    byte: counted in the RIFF size, not in the data chunk's."""
     data = g711_encode(samples, law)
     n_frames = len(data) // channels
     tag = 0x07 if law == "ulaw" else 0x06
@@ -4359,6 +4360,7 @@ def encode_wav_g711(
         + b"data"
         + len(data).to_bytes(4, "little")
         + data
+        + b"\0" * (len(data) & 1)
     )
     return b"RIFF" + len(body).to_bytes(4, "little") + body
 

@@ -1696,6 +1696,22 @@ def test_g711_wav_end_to_end_and_probe():
     assert mc.wav_features(p)[:4] == [2.0, 240.0, 8000.0, 1.0]
 
 
+@pytest.mark.parametrize("n", [1, 3, 5])
+def test_g711_odd_data_gets_riff_pad_byte(n):
+    sig = np.where(np.arange(n) % 2 == 0, 8, -8).astype(np.int16)
+    p = mc.encode_wav_g711(8000, 1, sig, law="alaw")
+    assert len(p) % 2 == 0
+    assert int.from_bytes(p[4:8], "little") == len(p) - 8
+    assert np.array_equal(mc.decode_wav(p)[2].astype(np.int64), sig.astype(np.int64))
+    # a chunk appended after `data` starts on the word boundary
+    extra = b"LIST" + (4).to_bytes(4, "little") + b"INFO"
+    q = b"RIFF" + (len(p) - 8 + len(extra)).to_bytes(4, "little") + p[8:] + extra
+    chunks = [(cc, q[lo:hi]) for cc, lo, hi in mc._riff_chunks(q, 12, len(q), "wav")]
+    assert [cc for cc, _ in chunks] == [b"fmt ", b"fact", b"data", b"LIST"]
+    assert len(chunks[2][1]) == n and chunks[3][1] == b"INFO"
+    assert np.array_equal(mc.decode_wav(q)[2].astype(np.int64), sig.astype(np.int64))
+
+
 def test_g711_malformed_raises():
     p = bytearray(mc.encode_wav_g711(8000, 1, np.zeros(16, np.int16)))
     p[34] = 16  # bits 8 → 16 in the fmt chunk
