@@ -257,10 +257,6 @@ def lookup_rows() -> list[dict]:
     ]
 
 
-def lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(lookup_rows())
-
-
 def lookup_sql(dialect: str) -> str:
     """Inline VALUES relation for the oracle side (and Spark SQL)."""
     rows = ", ".join(

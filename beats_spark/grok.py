@@ -294,6 +294,46 @@ def grok_values(
     return capture_matched(arr, len(captures)), values
 
 
+def first_match(
+    df: DataFrame, parsed: list[tuple[Column, list[tuple[str, str | None]]]]
+) -> tuple[DataFrame, list[str], Column, dict[str, Column]]:
+    """Materialize the (capture array, captures) patterns of `parsed`
+    and merge their `grok_values` first-match-wins: a field takes the
+    value of the first pattern that matched the row (NULL if that
+    pattern lacks it). Returns (df, the array columns to drop once
+    written, matched-by-any predicate, {field: value}).
+
+    ONE capture array per pattern, all built in one Generate from the
+    ORIGINAL source before any field reads them: a Filter on a capture
+    (drop_event) cannot be pushed below the Generate, so the plan
+    evaluates each pattern once per row and every read (nullif,
+    first-match-wins) is of a column; and a capture that overwrites the
+    source field itself (ES grok's in-place `message` overwrite, e.g.
+    kafka/icinga pipelines, or syslog's msg) cannot poison the other
+    captures."""
+    arrs = {f"__grok_arr_{k}__": arr for k, (arr, _) in enumerate(parsed)}
+    df = materialize(df, arrs)
+    matched_any: Column | None = None
+    fields: dict[str, Column] = {}
+    for name, (_, captures) in zip(arrs, parsed):
+        matched, values = grok_values(F.col(name), captures)
+        # a later pattern only fills fields for rows no earlier pattern
+        # matched (the first pattern's captures are already NULL where
+        # it did not match)
+        take = None if matched_any is None else matched & ~matched_any
+        for k, v in values.items():
+            prev = fields.get(k)
+            if take is not None:
+                # no explicit otherwise on first occurrence: an untyped
+                # NULL literal would coerce typed captures
+                v = F.when(take, v)
+                if prev is not None:
+                    v = v.otherwise(prev)
+            fields[k] = v
+        matched_any = matched if matched_any is None else matched_any | matched
+    return df, list(arrs), matched_any, fields
+
+
 def grok_columns(
     src: Column,
     pattern: str,
@@ -342,38 +382,11 @@ class Grok(Processor):
         tp = self.cfg.get("target_prefix", "")
         prefix = (tp + ".") if tp else ""
         anchored = self.cfg.get("anchored", True)
-        # ONE capture array per pattern, all built in one Generate from
-        # the ORIGINAL source before any field reads them: a Filter on a
-        # capture (drop_event) cannot be pushed below the Generate, so
-        # the plan evaluates each pattern once per row and every read
-        # (nullif, first-match-wins) is of a column; and a capture that
-        # overwrites the source field itself (ES grok's in-place
-        # `message` overwrite, e.g. kafka/icinga pipelines) cannot
-        # poison the other captures
         parsed = [
             grok_captures(src.cast("string"), p, extra, anchored=anchored)
             for p in pats
         ]
-        arrs = {f"__grok_arr_{k}__": arr for k, (arr, _) in enumerate(parsed)}
-        df = materialize(df, arrs)
-        matched_any: Column | None = None
-        fields: dict[str, Column] = {}
-        for name, (_, captures) in zip(arrs, parsed):
-            matched, values = grok_values(F.col(name), captures)
-            # first-match-wins: a later pattern only fills fields for
-            # rows no earlier pattern matched (the first pattern's
-            # captures are already NULL where it did not match)
-            take = None if matched_any is None else matched & ~matched_any
-            for k, v in values.items():
-                prev = fields.get(k)
-                if take is not None:
-                    # no explicit otherwise on first occurrence: an
-                    # untyped NULL literal would coerce typed captures
-                    v = F.when(take, v)
-                    if prev is not None:
-                        v = v.otherwise(prev)
-                fields[k] = v
-            matched_any = matched if matched_any is None else matched_any | matched
+        df, arrs, matched_any, fields = first_match(df, parsed)
         writes: dict[str, Column] = {}
         for k, v in fields.items():
             cur = field_col(df, prefix + k)

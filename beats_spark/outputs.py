@@ -59,13 +59,6 @@ def write_file_ndjson(
     writer.json(path)
 
 
-def write_console(df: DataFrame, codec: str = "json", fmt: str | None = None, limit: int = 20) -> None:
-    """Console output (debug): codec-encoded lines to driver stdout."""
-    line = codec_json(df) if codec == "json" else codec_format(df, fmt or "%{[message]}")
-    for r in df.select(line.alias("line")).limit(limit).collect():
-        print(r.line)
-
-
 # --- kafka partitioning (partition.go:64-112, 225-278) -----------------------
 
 _FNV_OFFSET, _FNV_PRIME = 2166136261, 16777619

@@ -31,6 +31,7 @@ from beats_spark.fields import (
 )
 from beats_spark.processors.base import Processor, register
 from beats_spark.processors.shape import _set_error
+from beats_spark.regex import capture_array
 
 
 @register
@@ -563,68 +564,37 @@ class Convert(Processor):
         return df
 
 
-# --- syslog (reader + processor share this) ---------------------------------
-
-_RFC3164 = (
-    r"^(?:<(\d{1,3})>)?"  # pri
-    r"([A-Z][a-z]{2} [ \d]\d \d{2}:\d{2}:\d{2}) "  # timestamp
-    r"([^ :\[]+) "  # hostname
-    r"([^ :\[]+?)(?:\[(\d+)\])?: "  # tag[pid]:
-    r"(.*)$"  # content
-)
-
-_RFC5424 = (
-    r"^<(\d{1,3})>(\d) "  # pri, version
-    r"(\S+) (\S+) (\S+) (\S+) (\S+) "  # ts host app procid msgid
-    r"(-|(?:\[.*?\])+)"  # structured data
-    r"(?: (.*))?$"  # msg
-)
-
-
-def syslog_columns(src: Column) -> dict[str, Column]:
-    """RFC3164/RFC5424 parse as native regexp_extract battery
-    (libbeat/reader/syslog/: rfc3164_gen.go, rfc5424_gen.go —
-    ~4000 LoC of generated ragel collapses into two regexes here).
-    priority → severity = pri % 8, facility = pri // 8."""
-    is5424 = src.rlike(_RFC5424)
-    is3164 = ~is5424 & src.rlike(_RFC3164)
-
-    def g3(i: int) -> Column:
-        return F.when(is3164, F.nullif(F.regexp_extract(src, _RFC3164, i), F.lit("")))
-
-    def g5(i: int) -> Column:
-        return F.when(is5424, F.nullif(F.regexp_extract(src, _RFC5424, i), F.lit("")))
-
-    pri = F.coalesce(g5(1), g3(1)).try_cast("int")
-    return {
-        "log.syslog.priority": pri,
-        "log.syslog.severity.code": pri % 8,
-        "log.syslog.facility.code": (pri / 8).cast("int"),
-        "log.syslog.hostname": F.coalesce(g5(4), g3(3)),
-        "log.syslog.appname": F.coalesce(g5(5), g3(4)),
-        "log.syslog.procid": F.coalesce(g5(6), g3(5)),
-        "log.syslog.msgid": g5(7),
-        "log.syslog.version": g5(2).try_cast("int"),
-        "log.syslog.sd_raw": F.when(is5424 & (g5(8) != "-"), g5(8)),
-        # structured-data params as map<string,string> (rfc5424 SD-PARAM;
-        # first element's params, matching the reference's flattening)
-        "log.syslog.sd": F.when(
-            is5424 & (g5(8) != "-"),
-            F.map_from_arrays(
-                F.regexp_extract_all(g5(8), F.lit(r'(\w+)="'), 1),
-                F.regexp_extract_all(g5(8), F.lit(r'\w+="([^"]*)"'), 1),
-            ),
-        ),
-        "timestamp_raw": F.coalesce(g5(3), g3(2)),
-        "message": F.coalesce(g5(9), g3(6)),
-        "_syslog_matched": (is5424 | is3164),
-    }
+# RFC5424 then RFC3164 (libbeat/reader/syslog/: rfc5424_gen.go,
+# rfc3164_gen.go — ~4000 LoC of generated ragel collapse into two
+# regexes), each with its captures in group order; RFC5424 wins
+_SYSLOG = [
+    (
+        r"^<(\d{1,3})>(\d) "  # pri, version
+        r"(\S+) (\S+) (\S+) (\S+) (\S+) "  # ts host app procid msgid
+        r"(-|(?:\[.*?\])+)"  # structured data
+        r"(?: (.*))?$",  # msg
+        [("priority", "int"), ("version", "int"), ("timestamp", None),
+         ("hostname", None), ("appname", None), ("procid", None),
+         ("msgid", None), ("sd", None), ("message", None)],
+    ),
+    (
+        r"^(?:<(\d{1,3})>)?"  # pri
+        r"([A-Z][a-z]{2} [ \d]\d \d{2}:\d{2}:\d{2}) "  # timestamp
+        r"([^ :\[]+) "  # hostname
+        r"([^ :\[]+?)(?:\[(\d+)\])?: "  # tag[pid]:
+        r"(.*)$",  # content
+        [("priority", "int"), ("timestamp", None), ("hostname", None),
+         ("appname", None), ("procid", None), ("message", None)],
+    ),
+]
 
 
 @register
 class Syslog(Processor):
     """syslog/syslog.go:79,141 — parse `field` (default message) as
-    RFC3164/RFC5424, auto-detected; failure → error + flag."""
+    RFC3164/RFC5424, auto-detected; failure → error + flag. Both
+    patterns share grok's match-once path (`grok.first_match`);
+    priority → severity = pri % 8, facility = pri // 8."""
 
     name = "syslog"
 
@@ -632,19 +602,28 @@ class Syslog(Processor):
         col = field_col(df, self.cfg.get("field", "message"))
         if col is None:
             return df
-        cols = syslog_columns(col)
-        matched = cols.pop("_syslog_matched")
-        ts_raw = cols.pop("timestamp_raw")
-        msg = cols.pop("message")
-        # materialize the predicate before any write (the batch below
-        # overwrites `message` in place — flag/error must not see the
-        # rewritten value), then one batched projection for all paths
-        df = df.withColumn(
-            "__syslog_matched__", F.coalesce(matched, F.lit(False))
-        )
-        matched = F.col("__syslog_matched__")
-        writes = dict(cols)
-        writes["syslog.timestamp_raw"] = ts_raw
+        from beats_spark.grok import first_match  # grok imports this package
+
+        parsed = [(capture_array(col, rx, len(caps)), caps) for rx, caps in _SYSLOG]
+        orig_msg = field_col(df, "message")
+        df, arrs, matched, v = first_match(df, parsed)
+        pri, ts_raw = v["priority"], v["timestamp"]
+        sd = F.when(v["sd"] != "-", v["sd"])
+        writes = {
+            "log.syslog.priority": pri,
+            "log.syslog.severity.code": pri % 8,
+            "log.syslog.facility.code": (pri / 8).cast("int"),
+            **{f"log.syslog.{k}": v[k] for k in ("hostname", "appname", "procid", "msgid")},
+            "log.syslog.version": v["version"],
+            "log.syslog.sd_raw": sd,
+            # structured-data params as map<string,string> (rfc5424
+            # SD-PARAM; every element's params, flattened)
+            "log.syslog.sd": F.map_from_arrays(
+                F.regexp_extract_all(sd, F.lit(r'(\w+)="'), 1),
+                F.regexp_extract_all(sd, F.lit(r'\w+="([^"]*)"'), 1),
+            ),
+            "syslog.timestamp_raw": ts_raw,
+        }
         # parse the timestamp: 5424 carries ISO8601; 3164 is BSD
         # time.Stamp, year-less — the reference derives the year from
         # now (syslog/message.go:101-110); `default_year` pins it for
@@ -669,15 +648,15 @@ class Syslog(Processor):
             F.when(ts_raw.isNotNull(), bsd)
         )
         writes["log.syslog.timestamp"] = parsed_ts
-        orig_msg = field_col(df, "message")
         if orig_msg is None:
             orig_msg = F.lit(None).cast("string")
-        writes["message"] = F.coalesce(msg, orig_msg)
+        writes["message"] = F.coalesce(v["message"], orig_msg)
+        # overwrites its paths (unlike grok, no coalesce with old values)
         df = put_fields(df, writes)
         df = add_flag(df, "syslog_parsing_error", ~matched)
         if not self.cfg.get("ignore_failure", False):
             df = _set_error(df, ~matched, "syslog: parse failure")
-        return df.drop("__syslog_matched__")
+        return df.drop(*arrs)
 
 
 @register

@@ -17,8 +17,9 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.fields import put_fields
+from beats_spark.fields import materialize, put_fields
 from beats_spark.processors.shape import _set_error
+from beats_spark.regex import capture, capture_array
 
 
 def parse_ndjson(
@@ -59,32 +60,30 @@ _DOCKER_SCHEMA = "struct<log:string, stream:string, time:string>"
 def parse_container(
     df: DataFrame, line_col: str = "message", stream: str = "all", fmt: str = "auto"
 ) -> DataFrame:
-    """docker_json.go: auto-detect Docker JSON-file vs CRI format."""
+    """docker_json.go: auto-detect Docker JSON-file vs CRI format. The
+    CRI capture array and the Docker struct come out of one Generate
+    (`fields.materialize`), so each is parsed once per line."""
     line = F.col(line_col)
-    docker = F.from_json(line, _DOCKER_SCHEMA)
-    is_docker = docker.isNotNull() & docker.getField("log").isNotNull()
+    df = materialize(df, {"__cri__": capture_array(line, _CRI_RE, 4),
+                          "__docker__": F.from_json(line, _DOCKER_SCHEMA)})
+    cri, docker = F.col("__cri__"), F.col("__docker__")
     if fmt == "docker":
         use_docker = F.lit(True)
     elif fmt == "cri":
         use_docker = F.lit(False)
     else:
-        use_docker = is_docker
-    cri_msg = F.regexp_extract(line, _CRI_RE, 4)
+        use_docker = docker.isNotNull() & docker.getField("log").isNotNull()
+    # a line that is neither format keeps an empty message
+    cri_msg = F.when(line.isNotNull(), F.coalesce(capture(cri, 3), F.lit("")))
     out_msg = F.when(use_docker, docker.getField("log")).otherwise(cri_msg)
     # docker log lines keep their trailing newline; strip like the reader
     out_msg = F.regexp_replace(out_msg, r"\n$", "")
-    out_stream = F.when(use_docker, docker.getField("stream")).otherwise(
-        F.nullif(F.regexp_extract(line, _CRI_RE, 2), F.lit(""))
-    )
-    out_time = F.when(use_docker, docker.getField("time")).otherwise(
-        F.nullif(F.regexp_extract(line, _CRI_RE, 1), F.lit(""))
-    )
-    # derive stream/time BEFORE replacing the line column — the
-    # expressions reference it by name
+    out_stream = F.when(use_docker, docker.getField("stream")).otherwise(capture(cri, 1))
+    out_time = F.when(use_docker, docker.getField("time")).otherwise(capture(cri, 0))
     df = put_fields(
         df, {"stream": out_stream, "@timestamp": F.try_to_timestamp(out_time)}
     )
-    df = df.withColumn(line_col, out_msg)
+    df = df.withColumn(line_col, out_msg).drop("__cri__", "__docker__")
     if stream != "all":
         df = df.filter(F.col("stream") == stream)
     return df

@@ -15,9 +15,10 @@ character-class-aware; `{n}`, `{n,}`, `{n,m}` quantifiers pass
 through untouched. A dangling `}` is already legal-and-literal in
 Java, so only `{` needs care.
 
-`capture_array` is the match-once primitive grok and native dissect
-share: every capture group of a regex's first match, built with one
-regex evaluation per row instead of one `regexp_extract` per group.
+`capture_array` is the match-once primitive every regex parse shares
+(grok, native dissect, syslog and the CRI container line): every
+capture group of a regex's first match, built with one regex
+evaluation per row instead of one `regexp_extract` per group.
 """
 
 from __future__ import annotations

@@ -296,12 +296,6 @@ def minhash_from_shingles(sh: Column, num_perm: int = 64, seed: int = 42) -> Col
     return F.when(F.size(sh) > 0, F.array(*mins))
 
 
-def minhash_signature(col: Column, num_perm: int = 64, k: int = 3, seed: int = 42) -> Column:
-    """Inline-column variant (tests/small frames). For bulk use, go
-    through minhash_lsh_candidates which materializes shingles first."""
-    return minhash_from_shingles(shingles(col, k), num_perm, seed)
-
-
 def exploded_shingles(
     df: DataFrame,
     text_col: str = "text",

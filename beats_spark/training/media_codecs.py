@@ -2915,10 +2915,6 @@ def _crc16(data: bytes) -> int:
     return c
 
 
-def _zigzag(v: int) -> int:
-    return (v << 1) if v >= 0 else (-(v << 1) - 1)
-
-
 def _rice_read(rd: _MsbReader, param: int) -> int:
     q = rd.read_unary()
     u = (q << param) | rd.read(param) if param else q

@@ -12,6 +12,10 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 REFERENCE = "/root/reference"
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: long-running test (a separate spark-submit job)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="beats_spark_tests", master="local[4]", shuffle_partitions=4)

@@ -24,11 +24,13 @@ from pyspark.sql import functions as F
 from beats_spark.checkpoint import CHUNK_COL, with_chunk
 from beats_spark.datagen import token_events_sql
 from beats_spark.dissect import Tokenizer, make_trimmer
-from beats_spark.fields import materialize
+from beats_spark.fields import add_flag, materialize, put_fields
 from beats_spark.flagship import flagship_config
 from beats_spark.grok import compile_grok, grok_columns, grok_values
 from beats_spark.pipeline import Pipeline
 from beats_spark.processors import compile_one
+from beats_spark.processors.parse import _SYSLOG
+from beats_spark.processors.shape import _set_error
 from beats_spark.readers.lines import include_message
 from beats_spark.regex import SEP, capture_array, single_pass_ok
 from tests.test_dissect_properties import tokenizers
@@ -363,6 +365,145 @@ def test_dissect_processor_trim_and_overwrite(spark, lines):
             assert {k: r[k] for k in want} == want, line
 
 
+# --- syslog --------------------------------------------------------------------
+
+# the per-group parse Syslog replaced: one rlike per pattern and one
+# regexp_extract per capture (the differential reference)
+_RFC3164 = (
+    r"^(?:<(\d{1,3})>)?"  # pri
+    r"([A-Z][a-z]{2} [ \d]\d \d{2}:\d{2}:\d{2}) "  # timestamp
+    r"([^ :\[]+) "  # hostname
+    r"([^ :\[]+?)(?:\[(\d+)\])?: "  # tag[pid]:
+    r"(.*)$"  # content
+)
+_RFC5424 = (
+    r"^<(\d{1,3})>(\d) "  # pri, version
+    r"(\S+) (\S+) (\S+) (\S+) (\S+) "  # ts host app procid msgid
+    r"(-|(?:\[.*?\])+)"  # structured data
+    r"(?: (.*))?$"  # msg
+)
+
+
+def _battery_syslog(df, field: str, year: int):
+    """The Syslog processor as it was, over the rlike/regexp_extract
+    battery: same writes, flag and error."""
+    src = F.col(field)
+    is5424 = src.rlike(_RFC5424)
+    is3164 = ~is5424 & src.rlike(_RFC3164)
+
+    def g3(i):
+        return F.when(is3164, F.nullif(F.regexp_extract(src, _RFC3164, i), F.lit("")))
+
+    def g5(i):
+        return F.when(is5424, F.nullif(F.regexp_extract(src, _RFC5424, i), F.lit("")))
+
+    pri = F.coalesce(g5(1), g3(1)).try_cast("int")
+    sd = is5424 & (g5(8) != "-")
+    ts_raw = F.coalesce(g5(3), g3(2))
+    bsd = F.try_to_timestamp(
+        F.concat(F.lit(str(year)), F.lit(" "), F.regexp_replace(ts_raw, " +", " ")),
+        F.lit("yyyy MMM d HH:mm:ss"),
+    )
+    iso = F.coalesce(*[
+        F.try_to_timestamp(ts_raw, F.lit(f))
+        for f in ("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX", "yyyy-MM-dd'T'HH:mm:ssXXX",
+                  "yyyy-MM-dd'T'HH:mm:ss.SSSXXX", "yyyy-MM-dd'T'HH:mm:ss")
+    ])
+    writes = {
+        "log.syslog.priority": pri,
+        "log.syslog.severity.code": pri % 8,
+        "log.syslog.facility.code": (pri / 8).cast("int"),
+        "log.syslog.hostname": F.coalesce(g5(4), g3(3)),
+        "log.syslog.appname": F.coalesce(g5(5), g3(4)),
+        "log.syslog.procid": F.coalesce(g5(6), g3(5)),
+        "log.syslog.msgid": g5(7),
+        "log.syslog.version": g5(2).try_cast("int"),
+        "log.syslog.sd_raw": F.when(sd, g5(8)),
+        "log.syslog.sd": F.when(sd, F.map_from_arrays(
+            F.regexp_extract_all(g5(8), F.lit(r'(\w+)="'), 1),
+            F.regexp_extract_all(g5(8), F.lit(r'\w+="([^"]*)"'), 1),
+        )),
+        "syslog.timestamp_raw": ts_raw,
+        "log.syslog.timestamp": F.when(ts_raw.rlike(r"^\d{4}-"), iso).otherwise(
+            F.when(ts_raw.isNotNull(), bsd)
+        ),
+        "message": F.coalesce(F.coalesce(g5(9), g3(6)), F.col("message")),
+    }
+    df = df.withColumn("__m__", F.coalesce(is5424 | is3164, F.lit(False)))
+    df = put_fields(df, writes)
+    df = add_flag(df, "syslog_parsing_error", ~F.col("__m__"))
+    return _set_error(df, ~F.col("__m__"), "syslog: parse failure").drop("__m__")
+
+
+_PRI = st.integers(0, 999).map(str)
+_TOK = st.text(alphabet="ab1.-_:[", min_size=1, max_size=5)
+# SD param values. The SD map throws in both parses when a value holds
+# a `]` or completes a `<word>="` (more keys than values); the generator
+# avoids them, and a batch that still throws must throw in both
+_PARAMS = st.lists(
+    st.text(alphabet='ab1 ="\\', max_size=4).filter(lambda v: '="' not in v + '"'),
+    min_size=1, max_size=3,
+)
+# SD elements; a param name repeats across elements (the map keeps the last)
+_SD = st.just("-") | st.lists(_PARAMS, min_size=1, max_size=3).map(
+    lambda els: "".join(
+        f"[e{i}@1" + "".join(f' p{j}="{v}"' for j, v in enumerate(ps)) + "]"
+        for i, ps in enumerate(els)
+    )
+)
+_BSD = st.builds(
+    "{} {:>2} {:02d}:{:02d}:{:02d}".format, st.sampled_from(["Oct", "Feb", "oct"]),
+    st.integers(1, 31), st.integers(0, 24), st.integers(0, 59), st.integers(0, 59),
+)
+_SYSLOG_LINES = st.one_of(
+    _mutated([
+        "<", _PRI, ">", st.sampled_from(["1", "2"]), " ", _TS | st.just("-"),
+        " ", _TOK, " ", _TOK, " ", _TOK, " ", _TOK, " ", _SD,
+        st.just("") | _DATA.map(" ".__add__),  # with and without a msg
+    ]),
+    _mutated([
+        st.just("") | _PRI.map("<{}>".format), _BSD, " ", _TOK, " ", _TOK,
+        st.just("") | st.integers(0, 99999).map("[{}]".format), ": ", _DATA,
+    ]),
+)
+_SYSLOG_HAND = [
+    None,
+    "",
+    "<165>1 2003-10-11T22:14:15.003Z host app - ID47 - msg",
+    "<165>1 2003-10-11T22:14:15.003Z host app 77 ID47 [a@1 x=\"1\"][b@2 y=\"2\" z=\"\"]",
+    "<34>Oct 11 22:14:15 mymachine su[230]: 'su root' failed",
+    "Oct  1 02:03:04 host cron: no pri, no pid",
+    "<34>Oct 11 22:14:15 host su[1]: a" + SEP + "b",
+    "<165>1 - h a - - -" + SEP,
+    "garbage",
+]
+
+
+@pytest.mark.parametrize("field", ["message", "line"])
+@EXAMPLES
+@given(lines=st.lists(_SYSLOG_LINES | st.none(), max_size=25))
+def test_syslog_agrees_with_per_group_battery(spark, field, lines):
+    """Every path Syslog writes, `message`, the flag and `_error` equal
+    the per-group battery's, row for row; with `field: line` the parse
+    reads `line` and a parsed msg replaces the separate `message`."""
+    lines = _SYSLOG_HAND + lines
+    rows = [(i, v, v if field == "message" else f"orig {i}") for i, v in enumerate(lines)]
+    df = spark.createDataFrame(rows, "id int, line string, message string")
+    if field == "message":
+        df = df.drop("line")
+    got = compile_one({"syslog": {"field": field, "default_year": 2024}})(df)
+    want = _battery_syslog(df, field, 2024)
+    assert got.schema == want.schema
+    assert _outcome(got) == _outcome(want)
+
+
+def _outcome(df):
+    try:
+        return df.orderBy("id").collect()
+    except Exception as e:  # noqa: BLE001 — see _PARAMS
+        return type(e).__name__
+
+
 # --- plan shape ----------------------------------------------------------------
 
 
@@ -488,6 +629,18 @@ def test_plan_grok_then_drop_event_matches_once(token_events):
         # a higher-order function would take its operator out of codegen
         assert not any(_holds(exprs, "ArrayTransform") for _, exprs, _, _ in _operators(out))
 
+
+
+def test_plan_syslog_then_drop_event_matches_once(token_events):
+    """Both RFC patterns, one Generate, a filter on a parsed field above it."""
+    cfg = {
+        "processors": [
+            {"syslog": {"field": "payload"}},
+            {"drop_event": {"when": {"equals": {"log.syslog.appname": "su"}}}},
+        ]
+    }
+    out = Pipeline(cfg).transform(token_events)
+    _assert_matches_once(out, *[rx for rx, _ in _SYSLOG])
 
 def test_plan_flagship_dissect_matches_once(token_events):
     cfg = flagship_config()

@@ -110,6 +110,28 @@ def test_container_stream_filter(spark):
     assert parse_container(df, stream="stderr").count() == 1
 
 
+
+def test_container_neither_format_and_cri_stream_filter(spark):
+    """A line that is neither Docker nor CRI keeps an empty message and
+    no stream (a NULL line stays NULL); the CRI path feeds the stream
+    filter."""
+    df = spark.createDataFrame(
+        [
+            ("not a container line",),
+            ('{"other":"json"}',),
+            (None,),
+            ("2024-01-01T00:00:01Z stderr F cri err",),
+            ("2024-01-01T00:00:02Z stdout P cri out",),
+        ],
+        "message string",
+    )
+    rows = parse_container(df).collect()
+    assert [(r.message, r.stream) for r in rows[:3]] == [("", None), ("", None), (None, None)]
+    assert all(r["@timestamp"] is None for r in rows[:3])
+    [err] = parse_container(df, stream="stderr").collect()
+    assert (err.message, err.stream) == ("cri err", "stderr")
+    assert err["@timestamp"] is not None
+
 def test_multiline_flush_pattern(spark):
     rows = [
         ("f", 0, "start A"),
