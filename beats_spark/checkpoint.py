@@ -15,8 +15,9 @@ uncommitted data:
   `pmod(xxhash64(doc_id), n_chunks)` — the doc_id plays the role of the
   file offset (stable under reruns, independent of physical layout).
 - each chunk attempt writes its parquet (partitioned by sink) to a
-  UNIQUE attempt directory `data/<run>/chunk=<k>/try-<n>/` that no
-  reader resolves directly.
+  UNIQUE attempt directory `data/<run>/__chunk=<k>/__try=<n>/` that no
+  reader resolves directly (n = 1 + the highest attempt already there;
+  a compaction is chunk -1).
 - the commit point is a single atomic filesystem rename: the full
   manifest (entry per committed chunk: data path, row count, doc-id
   range, per-chunk metrics, lineage) is written to a fresh versioned
@@ -36,6 +37,23 @@ preconditions); this module implements the local/HDFS flavor with os
 primitives driver-side. Unlike the previous design, correctness does
 NOT depend on spark.sql.sources.partitionOverwriteMode — partial data
 is never visible, so nothing ever needs to be overwritten in place.
+
+One compiled plan per run (the registrar's cost per unit of work
+stays flat, `registrar.go:133-188`): nothing chunk-specific may reach
+the generated code.
+- A chunk job selects its rows with `chunk_predicate`, which compares
+  the chunk id as a STRING. Spark writes an int literal straight into
+  the generated Java, so `== k` compiles one whole-stage class per
+  chunk id, and each new class starts in the JVM's bytecode
+  interpreter; a string literal travels in the references array, so
+  every chunk job runs the one class the first compiled.
+- The attempt directories are `key=value` segments, so the read-back
+  takes CHUNK_COL from the path: `result()` reads every live entry that
+  shares (layout, partition spec, written schema — its hash is in the
+  manifest) with ONE multi-path scan under the run directory, and
+  unions the groups by name (a later chunk may add columns). The plan
+  is the same for 2 chunks or 200. Pruned reads pass the surviving
+  files of an entry (its directory when all survive) to the same scan.
 
 File sizing (the Beats `bulk_max_size` batching, as Iceberg write
 file sizing): a chunk job scans every input split and keeps only
@@ -57,13 +75,14 @@ PUT flavor of the pointer swap.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import time
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,15 +90,17 @@ from beats_spark.sinks import SINK_COL, dead_letter_count, strip_internal
 from beats_spark.fields import ERROR_COL
 
 CHUNK_COL = "__chunk__"
+# directory keys of an attempt dir, `<run dir>/__chunk=<k>/__try=<n>/`;
+# a scan under the run dir reads them back as partition columns
+# (`__`-prefixed, so no committed data column can collide with them)
+_CHUNK_KEY, _TRY_KEY = "__chunk", "__try"
 
 
-def _next_attempt_dir(root: str) -> tuple[int, str]:
-    """The next unused `try-<n>` attempt number under `root` and its dir
-    (n = 1 + the attempts already there)."""
-    attempt = 1
-    if os.path.isdir(root):
-        attempt += sum(1 for d in os.listdir(root) if d.startswith("try-"))
-    return attempt, os.path.join(root, f"try-{attempt}")
+def _schema_id(schema: T.StructType) -> str:
+    """Hash of a written schema's names and types (not nullability: a
+    file scan reads every column as nullable). Entries with equal ids
+    and equal partition specs read back under one schema."""
+    return hashlib.sha1(schema.simpleString().encode()).hexdigest()[:16]
 
 
 def _union_all(frames: list[DataFrame]) -> DataFrame:
@@ -97,8 +118,6 @@ def _bucket_table_prefix(data_dir: str, run_id: str) -> str:
     dirs would silently overwrite each other's catalog entries and
     serve each other's data — so the name carries a hash of the
     (data_dir, run_id) pair."""
-    import hashlib
-
     safe = "".join(c if c.isalnum() else "_" for c in run_id)
     h = hashlib.sha1(f"{data_dir}\0{run_id}".encode()).hexdigest()[:8]
     return f"bs_mor_{safe}_{h}"
@@ -237,6 +256,15 @@ def with_chunk(df: DataFrame, n_chunks: int) -> DataFrame:
     )
 
 
+def chunk_predicate(chunk: int) -> Column:
+    """Rows of `chunk` in a `with_chunk` frame, with the same generated
+    code for every chunk id: the id is compared as a string literal,
+    which Spark passes through the references array (an int literal is
+    inlined, one compiled class per id). It reads only input columns,
+    so it still sits below a parse `Generate`."""
+    return F.col(CHUNK_COL).cast("string") == F.lit(str(chunk))
+
+
 class CheckpointedRunner:
     def __init__(
         self,
@@ -299,6 +327,20 @@ class CheckpointedRunner:
     def _entries(self) -> list[dict[str, Any]]:
         return self._current_version()[1]
 
+    def _next_attempt(self, chunk: int) -> tuple[int, str]:
+        """The next attempt number of `chunk` and its dir: 1 + the
+        HIGHEST number there, so an attempt removed by hand never makes
+        a later one reuse (and overwrite) a live number."""
+        root = os.path.join(self.data_dir, self.run_id, f"{_CHUNK_KEY}={chunk}")
+        tries = [0]
+        if os.path.isdir(root):
+            for d in os.listdir(root):
+                key, _, n = d.partition("=")
+                if key == _TRY_KEY and n.isdigit():
+                    tries.append(int(n))
+        attempt = max(tries) + 1
+        return attempt, os.path.join(root, f"{_TRY_KEY}={attempt}")
+
     # -- time travel (Iceberg snapshot-read analog) ----------------------
 
     def versions(self) -> list[int]:
@@ -333,11 +375,72 @@ class CheckpointedRunner:
         with open(os.path.join(self.manifest_dir, f"v-{version:08d}.json")) as fh:
             return json.load(fh)
 
+    def _snapshot(
+        self, version: int | None = None, nonempty: bool = False
+    ) -> list[dict[str, Any]]:
+        """The live entries of THIS run at `version` (default: the one
+        CURRENT names), in chunk order; `nonempty` leaves out zero-row
+        commits (they have no data files)."""
+        return sorted(
+            (
+                e
+                for e in self._entries_at(version)
+                if e["run_id"] == self.run_id
+                and not (nonempty and int(e["row_count"]) <= 0)
+            ),
+            key=lambda e: e["chunk_id"],
+        )
+
+    def _scan(
+        self,
+        entries: list[dict[str, Any]],
+        keep_file: Callable[[dict[str, Any]], bool] | None = None,
+    ) -> DataFrame | None:
+        """Read `entries` with one scan per group of entries that share
+        layout (chunk, compacted, bucketed), partition spec and written
+        schema, unioned by name; CHUNK_COL comes from each file's
+        `__chunk=<k>` segment.
+        `keep_file` prunes on the manifest's per-file stats: an entry
+        whose files all survive is passed as its directory, otherwise
+        its surviving files (fewer root paths keep Spark's file listing
+        on the driver; past 32 it starts a listing job). None when no
+        file is left."""
+        groups: dict[tuple, list[str]] = {}
+        for e in entries:
+            if int(e["row_count"]) <= 0:
+                continue  # a zero-row commit leaves no footer to read
+            paths = [e["path"]]
+            if keep_file is not None and e.get("files"):
+                kept = [f["path"] for f in e["files"] if keep_file(f)]
+                if len(kept) < len(e["files"]):
+                    paths = kept
+            if paths:
+                group = (
+                    e["chunk_id"] == -1,
+                    "bucket" in e,
+                    tuple(e["partition_spec"]),
+                    e["schema"],
+                )
+                groups.setdefault(group, []).extend(paths)
+        if not groups:
+            return None
+        # basePath: the chunk and attempt keys and the partition spec
+        # are read from the path segments below the run dir (the cast
+        # holds the chunk id's type when partition type inference is off)
+        base = os.path.join(self.data_dir, self.run_id)
+        return _union_all(
+            [
+                self.spark.read.option("basePath", base)
+                .parquet(*paths)
+                .withColumn(CHUNK_COL, F.col(_CHUNK_KEY).cast("int"))
+                .drop(_CHUNK_KEY, _TRY_KEY)
+                for paths in groups.values()
+            ]
+        )
+
     def committed_chunks(self) -> set[int]:
         out: set[int] = set()
-        for e in self._entries():
-            if e["run_id"] != self.run_id:
-                continue
+        for e in self._snapshot():
             if e["chunk_id"] == -1:
                 # a compacted entry stands in for every chunk it folded
                 out.update(e.get("compacted_chunks", []))
@@ -373,7 +476,7 @@ class CheckpointedRunner:
         for chunk in range(self.n_chunks):
             if chunk in done:
                 continue
-            part = chunked.filter(F.col(CHUNK_COL) == chunk)
+            part = chunked.filter(chunk_predicate(chunk))
             out = transform(part)
             processed += 1
             crashed = self.commit_chunk(
@@ -422,11 +525,12 @@ class CheckpointedRunner:
         an orphaned table name no manifest reader ever resolves).
 
         `partition_cols` overrides the default sink-column layout for
-        THIS chunk — Iceberg partition-spec evolution: the spec is
-        recorded per chunk in the manifest, each chunk reads under
-        its own spec (result() resolves chunks individually), and
-        pruning consults each file's parsed `key=value` segments, so
-        old-spec and new-spec chunks coexist in one run.
+        THIS chunk — Iceberg partition-spec evolution: the spec and the
+        hash of the written schema are recorded per chunk in the
+        manifest, result() reads the chunks that share both with one
+        scan and unions the groups by name, and pruning consults each
+        file's parsed `key=value` segments, so old-spec and new-spec
+        chunks coexist in one run.
 
         Plain commits with a non-empty spec write through an AQE
         rebalance on the spec (see the module docstring: a chunk's
@@ -451,6 +555,7 @@ class CheckpointedRunner:
                 else [SINK_COL]
             )
         out = strip_internal(out, keep=(ERROR_COL, CHUNK_COL)).drop(CHUNK_COL)
+        schema = _schema_id(out.schema)
         if spec:
             out = out.hint("rebalance", *spec)
         # manifest stats ride the write itself via Observation — no
@@ -467,10 +572,7 @@ class CheckpointedRunner:
         # unique attempt dir: failed attempts are never referenced
         # by the manifest, so they are invisible to readers and
         # simply superseded by the next attempt
-        chunk_root = os.path.join(
-            self.data_dir, self.run_id, f"chunk={chunk}"
-        )
-        attempt, attempt_dir = _next_attempt_dir(chunk_root)
+        attempt, attempt_dir = self._next_attempt(chunk)
         bucket_meta = None
         if bucket_key is not None:
             # bucketed layout lives in the catalog; the sink partition
@@ -515,6 +617,7 @@ class CheckpointedRunner:
                 attempt_dir, extra_cols=self.stat_cols
             ),
             "partition_spec": spec,
+            "schema": schema,
             "metrics": {
                 "events.published": int(stats_d["n"]),
                 "events.dead_letter": int(stats_d["dead"]),
@@ -557,16 +660,11 @@ class CheckpointedRunner:
         # zero-row chunk entries have no readable data and no doc-id
         # range: they stay as standalone commit records, only non-empty
         # chunks fold into the compacted set
-        mine = [
-            e
-            for e in self._entries()
-            if e["run_id"] == self.run_id and int(e["row_count"]) > 0
-        ]
+        mine = self._snapshot(nonempty=True)
         if len(mine) <= 1:
             return 0
-        out = _union_all([self.spark.read.parquet(e["path"]) for e in mine])
-        comp_root = os.path.join(self.data_dir, self.run_id, "compacted")
-        _, attempt_dir = _next_attempt_dir(comp_root)
+        out = self._scan(mine).drop(CHUNK_COL)
+        _, attempt_dir = self._next_attempt(-1)
         if zorder_cols:
             from beats_spark import layout
 
@@ -601,14 +699,12 @@ class CheckpointedRunner:
             "max_doc_id": hi,
             "source_snapshot": self.source_snapshot,
             "files": collect_file_stats(attempt_dir, extra_cols=self.stat_cols),
+            "partition_spec": [SINK_COL],
+            "schema": _schema_id(out.schema),
             "metrics": metrics,
             "committed_at": time.time(),
         }
-        others = [
-            e
-            for e in self._entries()
-            if e["run_id"] != self.run_id or int(e["row_count"]) == 0
-        ]
+        others = [e for e in self._entries() if e not in mine]
         self._commit(others + [entry])
         return len(mine)
 
@@ -667,9 +763,7 @@ class CheckpointedRunner:
         ({col: {allowed values}}) under whichever partition spec each
         chunk was committed with — both safe supersets like the
         doc_id path."""
-        mine = [
-            e for e in self._entries_at(version) if e["run_id"] == self.run_id
-        ]
+        mine = self._snapshot(version)
         if not mine:
             raise FileNotFoundError(
                 f"no committed chunks for run {self.run_id!r}"
@@ -712,24 +806,9 @@ class CheckpointedRunner:
             return True
 
         # zero-row chunks are legitimately committed (e.g. a fully
-        # deduplicated chunk) but their attempt dir has no parquet
-        # footers to infer a schema from — skip the read, keep the
-        # commit record
-        frames = []
-        for e in sorted(mine, key=lambda e: e["chunk_id"]):
-            if int(e["row_count"]) <= 0:
-                continue
-            if pruning and e.get("files"):
-                paths = [f["path"] for f in e["files"] if keep_file(f)]
-                if not paths:
-                    continue
-                # basePath keeps the sink partition column when reading
-                # individual leaf files
-                df = self.spark.read.option("basePath", e["path"]).parquet(*paths)
-            else:
-                df = self.spark.read.parquet(e["path"])
-            frames.append(df.withColumn(CHUNK_COL, F.lit(e["chunk_id"])))
-        if not frames:
+        # deduplicated chunk) but have no data files: _scan skips them
+        out = self._scan(mine, keep_file if pruning else None)
+        if out is None:
             if pruning:
                 base = self.result(version=version)
                 return base.filter(F.lit(False))
@@ -737,7 +816,7 @@ class CheckpointedRunner:
                 f"all committed chunks of run {self.run_id!r} are empty "
                 "(0 rows) — no schema to materialize"
             )
-        return _union_all(frames)
+        return out
 
     def result_latest(
         self,
@@ -821,11 +900,7 @@ class CheckpointedRunner:
         same (bucket_key, num_buckets); raises on mixed layouts.
         Tombstone semantics and the misspelled-column guard match
         result_latest."""
-        mine = [
-            e
-            for e in self._entries_at(version)
-            if e["run_id"] == self.run_id and int(e["row_count"]) > 0
-        ]
+        mine = self._snapshot(version, nonempty=True)
         if not mine:
             raise FileNotFoundError(
                 f"no committed non-empty chunks for run {self.run_id!r}"
@@ -840,7 +915,7 @@ class CheckpointedRunner:
         if len(specs) > 1:
             raise ValueError(f"mixed bucket specs {specs}")
         (key, _n) = next(iter(specs))
-        ordered = sorted(mine, key=lambda e: e["chunk_id"], reverse=True)
+        ordered = mine[::-1]
         scans = [self._bucketed_scan(e) for e in ordered]
         frames: list[DataFrame] = []
         for i, (e, df) in enumerate(zip(ordered, scans)):
@@ -872,11 +947,7 @@ class CheckpointedRunner:
         When every non-empty chunk was committed bucketed on `key`,
         the merge uses the exchange-free anti-join cascade
         (result_latest_bucketed) instead of the windowed shuffle."""
-        mine = [
-            e
-            for e in self._entries_at(version)
-            if e["run_id"] == self.run_id and int(e["row_count"]) > 0
-        ]
+        mine = self._snapshot(version, nonempty=True)
         # the bucketed fast path needs ONE uniform (key, n) spec across
         # every chunk; a mid-run bucket-count change (or any unbucketed
         # chunk) falls back to the windowed merge rather than hard-

@@ -609,6 +609,10 @@ class Syslog(Processor):
         df, arrs, matched, v = first_match(df, parsed)
         pri, ts_raw = v["priority"], v["timestamp"]
         sd = F.when(v["sd"] != "-", v["sd"])
+        # keys and values are groups 1 and 2 of ONE pair pattern, so the
+        # two arrays always have the same length (a `word="` inside a
+        # value, or a value with no closing quote, is not a pair)
+        sd_pair = F.lit(r'(\w+)="([^"]*)"')
         writes = {
             "log.syslog.priority": pri,
             "log.syslog.severity.code": pri % 8,
@@ -619,8 +623,8 @@ class Syslog(Processor):
             # structured-data params as map<string,string> (rfc5424
             # SD-PARAM; every element's params, flattened)
             "log.syslog.sd": F.map_from_arrays(
-                F.regexp_extract_all(sd, F.lit(r'(\w+)="'), 1),
-                F.regexp_extract_all(sd, F.lit(r'\w+="([^"]*)"'), 1),
+                F.regexp_extract_all(sd, sd_pair, 1),
+                F.regexp_extract_all(sd, sd_pair, 2),
             ),
             "syslog.timestamp_raw": ts_raw,
         }

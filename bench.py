@@ -48,9 +48,10 @@ def _disk_state() -> dict:
 
 
 def _drain_disk() -> None:
-    """Best-effort sync + page-cache drop before a scaling run (the
-    BASELINE r3s2 protocol: 0.665 churned → 0.883 drained on identical
-    code). Failures are ignored — the marker still records the state."""
+    """Best-effort sync + page-cache drop before a scaling run when
+    BENCH_DRAIN=1 (the BASELINE r3s2 protocol: 0.665 churned → 0.883
+    drained on identical code). Failures are ignored — the marker still
+    records the state."""
     import subprocess
 
     try:
@@ -225,7 +226,8 @@ def main() -> None:
         # Override with SCALING_N.
         from beats_spark.datagen import generate_token_events
 
-        if os.environ.get("BENCH_DRAIN", "1") != "0":
+        # opt-in: the drop writes /proc/sys/vm/drop_caches
+        if os.environ.get("BENCH_DRAIN") == "1":
             _drain_disk()
         disk = _disk_state()
         n_low = int(os.environ.get("SCALING_N", "2"))

@@ -3,15 +3,20 @@ an AQE rebalance on the partition spec (one file per sink value for a
 small chunk, a hot sink split at the advisory size), bucketed and
 unpartitioned commits do not; the manifest Observation survives a
 zero-row chunk; the fan-out write's counters are 0, not NULL, on zero
-rows."""
+rows; a new attempt is numbered after the highest one on disk. Plans:
+every chunk job of a run compiles the same whole-stage source, and the
+read-back is one scan whose generated code does not depend on the
+number of chunks."""
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections import Counter
 
 from pyspark.sql import functions as F
 
-from beats_spark.checkpoint import CheckpointedRunner
+from beats_spark.checkpoint import CHUNK_COL, CheckpointedRunner
 from beats_spark.sinks import write_fanout
 
 
@@ -119,3 +124,74 @@ def test_write_fanout_zero_rows_counts_zero(spark, tmp_path):
         _chunk(spark).filter(F.col("doc_id") < 0), str(tmp_path / "fan")
     )
     assert obs.get == {"events_published": 0, "events_dead_letter": 0}
+
+
+def test_next_attempt_follows_the_highest(spark, tmp_path):
+    """With attempts 1 and 3 on disk (2 removed by hand), the next
+    commit lands in 4, not in 3 (1 + the count), and the files of 1 and
+    3 stay as they were."""
+    r = CheckpointedRunner(spark, str(tmp_path / "tries"), n_chunks=1)
+    df = _chunk(spark)
+    assert r.commit_chunk(df, 0, fail_before_commit=True) is None  # 1
+    assert r.commit_chunk(df, 0, fail_before_commit=True) is None  # 2
+    r.commit_chunk(df, 0)  # 3
+    root = os.path.dirname(_entry(r, 0)["path"])
+    shutil.rmtree(os.path.join(root, "__try=2"))
+
+    def files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(root)
+            for f in fs
+        }
+
+    before = files()
+    r.commit_chunk(df, 0)
+    assert [os.path.basename(e["path"]) for e in r._entries()] == ["__try=3", "__try=4"]
+    after = files()
+    assert {p: after.get(p) for p in before} == before
+    assert r.result().count() == 800
+
+
+def _generated_code(df) -> list[str]:
+    """The Java source of every whole-stage codegen subtree of `df`'s
+    executed plan (the final adaptive plan once an action has run)."""
+    seq = df._jdf.queryExecution().debug().codegenToSeq()
+    return [seq.apply(i)._2() for i in range(seq.size())]
+
+
+def test_chunk_jobs_share_one_generated_plan(spark, tmp_path):
+    """The chunk id never reaches the generated code: chunks 2 and 5 of
+    one run execute string-equal whole-stage source (an int literal in
+    the chunk filter would compile one class per chunk)."""
+    parts = []
+
+    def transform(part):
+        parts.append(part)
+        return part
+
+    r = CheckpointedRunner(spark, str(tmp_path / "jobs"), n_chunks=8)
+    assert r.run(_chunk(spark), transform) == list(range(8))
+    code = []
+    for chunk in (2, 5):
+        rows = parts[chunk].collect()
+        assert rows and {x[CHUNK_COL] for x in rows} == {chunk}
+        code.append(_generated_code(parts[chunk]))
+    assert code[0] and code[0] == code[1]
+
+
+def test_result_reads_every_chunk_with_one_scan(spark, tmp_path):
+    """result() over 2 and over 8 uniform chunks: one FileScan, chunk
+    ids read from the attempt paths, string-equal generated code."""
+    code = []
+    for n in (2, 8):
+        r = CheckpointedRunner(spark, str(tmp_path / f"n{n}"), n_chunks=n)
+        r.run(_chunk(spark), lambda part: part)
+        df = r.result()
+        rows = df.collect()
+        assert len(rows) == 400
+        assert {x[CHUNK_COL] for x in rows} == set(range(n))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan") == 1, plan
+        code.append(_generated_code(df))
+    assert code[0] and code[0] == code[1]

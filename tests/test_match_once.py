@@ -21,7 +21,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from beats_spark.checkpoint import CHUNK_COL, with_chunk
+from beats_spark.checkpoint import chunk_predicate, with_chunk
 from beats_spark.datagen import token_events_sql
 from beats_spark.dissect import Tokenizer, make_trimmer
 from beats_spark.fields import add_flag, materialize, put_fields
@@ -656,15 +656,15 @@ _INCLUDE = "^level=(info|warn)"
     "kind, text, keep",
     [
         ("RLike", _INCLUDE, lambda df: include_message(df, [_INCLUDE], line_col="payload")),
-        ("XxHash64", "", lambda df: df.filter(F.col(CHUNK_COL) == 3)),
+        ("XxHash64", "", lambda df: df.filter(chunk_predicate(3))),
     ],
     ids=["include_lines", "chunk"],
 )
 def test_plan_input_filters_run_below_the_parse(token_events, order, kind, text, keep):
     """Filters on input columns sit below the Generate that parses,
     whether applied before or after the chain: include_lines' rlike on
-    the payload, and a checkpoint chunk's pmod(xxhash64(doc_id)) filter,
-    so a chunk job parses only its own rows."""
+    the payload, and the checkpoint runner's chunk predicate on
+    pmod(xxhash64(doc_id)), so a chunk job parses only its own rows."""
     pipe = Pipeline(flagship_config())
     df = with_chunk(token_events, 8)
     out = pipe.transform(keep(df)) if order == "before" else keep(pipe.transform(df))

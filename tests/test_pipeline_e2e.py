@@ -222,7 +222,7 @@ def test_checkpoint_mid_chunk_crash_replay(spark, tmp_path):
     garbage = pipe.transform(partial)
     strip_internal(garbage, keep=(ERROR_COL,)).write.partitionBy(
         SINK_COL
-    ).mode("overwrite").parquet(f"{runner.data_dir}/{runner.run_id}/chunk=2/try-1")
+    ).mode("overwrite").parquet(f"{runner.data_dir}/{runner.run_id}/__chunk=2/__try=1")
 
     # resume: chunks 2 and 3 run into fresh attempts; the partial
     # attempt is never referenced
@@ -558,7 +558,7 @@ def test_streaming_incremental_dedup_exactly_once_kill_restart(spark, tmp_path):
     # the orphan attempt dir exists on disk but is invisible to readers
     import os
 
-    assert os.path.isdir(os.path.join(resumed.data_dir, "run-0", "chunk=2", "try-1"))
+    assert os.path.isdir(os.path.join(resumed.data_dir, "run-0", "__chunk=2", "__try=1"))
 
     # --- final restart drains to completion
     q4 = run_stream_dedup(stream(), resumed, ck2, transform=sink)

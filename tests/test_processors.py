@@ -191,6 +191,22 @@ def test_syslog_rfc5424(spark):
     assert r.message == "An application event"
 
 
+def test_syslog_hostile_sd_values_parse(spark):
+    """SD values that complete a `word="` or hold `]` used to give the
+    key and value arrays different lengths and fail the whole job; the
+    map now holds exactly the matched pairs."""
+    lines = [
+        '<0>1 - 1 1 1 1 [e0@1 p00="1="]',
+        '<0>1 - 1 1 1 1 [e0@1 p00="]] a"]',
+    ]
+    df = _df(spark, [(v,) for v in lines], "message string")
+    rows = compile_one({"syslog": {}})(df).collect()
+    sd = [r["log"]["syslog"]["sd"] for r in rows]
+    raw = [r["log"]["syslog"]["sd_raw"] for r in rows]
+    assert raw == ['[e0@1 p00="1="]', '[e0@1 p00="]]']
+    assert sd == [{"p00": "1="}, {}]
+
+
 def test_fingerprint_known_value(spark):
     import hashlib
 
